@@ -24,6 +24,15 @@ Behavioral contract (from the reference, cited per method):
   (`lib/nats.js:117-119,164-166`); bad arguments raise
   `BAD_SUBJECT` / `BAD_MSG` (`lib/nats.js:15-23,167-172`).
 
+Dispatch cost (the reference's semantics, not its loop): the reference
+matches every subscription's pattern against each message's channel. Here
+``CdcNats`` keeps a route table, channel -> tuple of matching sids in
+registry order, filled on a miss by that same scan. Any change to the
+registry empties it: ``subscribe``, ``unsubscribe``, the auto-unsubscribe
+at ``max`` and ``close``. It is also emptied wholesale when it would grow
+past ``_ROUTE_CAP`` channels. Each callback's arity is read once, at
+``subscribe``.
+
 The engine side is unchanged by this module — `filter_channel`,
 `bounded_subscription`, `rpc_first_response` et al. are the set-based
 twins of these per-message semantics (tests/test_semantics.py pins both
@@ -33,6 +42,7 @@ the core-NATS TCP / spool transports in `sources/nats.py`.
 
 from __future__ import annotations
 
+import inspect
 import time
 from collections.abc import Callable
 from typing import Any
@@ -54,21 +64,23 @@ from . import __version__ as version  # noqa: F401
 
 DEFAULT_TOPIC = "cdc.client"
 RPC_TIMEOUT_S = 10  # lib/nats.js:238-239 (seconds)
+# Route-table size cap: past it the table is emptied and refilled on
+# demand, so a stream of unique channels (RPC reply subjects) cannot grow
+# it without bound.
+_ROUTE_CAP = 4096
 
 
-def _invoke(cb: Callable, msg: dict, subject: str, sid: int) -> None:
-    """Deliver with the reference's callback signature
-    ``(cdcMsg, subject, sid)`` (`lib/nats.js:109-111`). JS ignores extra
-    arguments automatically; Python cannot, so the callback receives the
-    first ``n`` of (msg, subject, sid) for its declared arity — one- and
-    two-parameter callbacks are both legal in the reference."""
-    import inspect
-
+def _arity(cb: Callable | None) -> int:
+    """How many of the reference's callback arguments ``(cdcMsg, subject,
+    sid)`` (`lib/nats.js:109-111`) to pass. JS ignores extra arguments;
+    Python cannot, so a callback gets the first ``n`` for its declared
+    arity (one- and two-parameter callbacks are both legal in the
+    reference), and all three when its signature cannot be read."""
     try:
         n = len(inspect.signature(cb).parameters)
     except (TypeError, ValueError):
         n = 3
-    cb(*(msg, subject, sid)[: max(1, min(n, 3))])
+    return max(1, min(n, 3))
 
 
 class LocalBroker:
@@ -173,6 +185,7 @@ class CdcNats(EventEmitter):
         self._closed = False
         self.ssid = -1                     # lib/nats.js:52 (first sid is 0)
         self.subs: dict[int, dict] = {}    # lib/nats.js:52
+        self._routes: dict[str, tuple[int, ...]] = {}  # channel -> sids
         broker.subscribe(topic, self._process_msg)
 
     # -- lifecycle -------------------------------------------------------------
@@ -187,6 +200,7 @@ class CdcNats(EventEmitter):
             self.removeAllListeners()      # lib/nats.js:71
         self.ssid = -1                     # lib/nats.js:72
         self.subs = None                   # lib/nats.js:73
+        self._routes.clear()
 
     def process_err(self, error: Exception | str) -> None:
         """Transport-error hook (`lib/nats.js:82-84`): wrap and emit as an
@@ -217,7 +231,11 @@ class CdcNats(EventEmitter):
             opts = opts_or_cb
         self.ssid += 1
         sid = self.ssid
-        self.subs[sid] = {"subject": subject, "callback": callback, "received": 0}
+        self.subs[sid] = {
+            "subject": subject, "callback": callback, "received": 0,
+            "nargs": _arity(callback),
+        }
+        self._routes.clear()
         # Emit BEFORE arming max — the reference's order (lib/nats.js:137
         # precedes the `if (max)` at :139).
         self.emit("subscribe", sid, subject, opts_or_cb if isinstance(opts_or_cb, dict) else None)
@@ -237,13 +255,18 @@ class CdcNats(EventEmitter):
         if sub is None:
             return
         if max_n is None:
-            del self.subs[sid]
-            self.emit("unsubscribe", sid, sub["subject"])  # lib/nats.js:159
+            self._drop(sid, sub)
             return
         sub["max"] = max_n
         if sub["received"] >= max_n:
-            del self.subs[sid]
-            self.emit("unsubscribe", sid, sub["subject"])  # lib/nats.js:159
+            self._drop(sid, sub)
+
+    def _drop(self, sid: int, sub: dict) -> None:
+        """Delete a subscription, empty the route table and emit
+        ``("unsubscribe", sid, subject)`` (`lib/nats.js:102,159`)."""
+        del self.subs[sid]
+        self._routes.clear()
+        self.emit("unsubscribe", sid, sub["subject"])
 
     # -- publish ---------------------------------------------------------------
     def publish(self, subject: str, msg: bytes, callback: Callable | None = None) -> None:
@@ -261,25 +284,39 @@ class CdcNats(EventEmitter):
 
     # -- dispatch --------------------------------------------------------------
     def _process_msg(self, message: bytes) -> None:
-        """Decode + linear registry scan with MQTT match + counter/max
-        bookkeeping (`lib/nats.js:86-113`)."""
+        """Decode, find the subscriptions whose pattern matches the
+        message's channel, then counter/max bookkeeping and delivery per
+        subscription (`lib/nats.js:86-113`). The matching sids come from
+        the route table (see the module docstring); a sid is looked up
+        again before delivery, so a subscription an earlier callback
+        removed is skipped and one added during dispatch waits for the
+        next message, as with the reference's registry scan."""
         cdc_msg = decode_cdcmsg(message)
-        for sid in list(self.subs):
+        channel = cdc_msg["channel"]
+        sids = self._routes.get(channel)
+        if sids is None:
+            sids = tuple(
+                sid for sid, sub in self.subs.items()
+                if matches(sub["subject"], channel)
+            )
+            if len(self._routes) >= _ROUTE_CAP:
+                self._routes.clear()
+            self._routes[channel] = sids
+        for sid in sids:
             sub = self.subs.get(sid)
-            if sub is None or not matches(sub["subject"], cdc_msg["channel"]):
+            if sub is None:
                 continue
             sub["received"] += 1
             if "max" in sub:
                 if sub["received"] == sub["max"]:
-                    del self.subs[sid]          # delivered, then dropped
-                    self.emit("unsubscribe", sid, sub["subject"])  # lib/nats.js:102
+                    self._drop(sid, sub)  # delivered, then dropped
                 elif sub["received"] > sub["max"]:
                     # Reference routes this through unsubscribe(sid)
                     # (lib/nats.js:104), which emits if still present.
                     self.unsubscribe(sid)
                     sub["callback"] = None
             if sub["callback"] is not None:
-                _invoke(sub["callback"], cdc_msg, sub["subject"], sid)
+                sub["callback"](*(cdc_msg, sub["subject"], sid)[: sub["nargs"]])
 
     # -- RPC -------------------------------------------------------------------
     def rpc(

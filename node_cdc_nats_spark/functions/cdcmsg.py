@@ -19,22 +19,27 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-# (field_number, name, kind) in examples/cdc-pub.js:31-40 declaration order.
-FIELDS = (
-    (1, "publisher", "str"),
-    (2, "channel", "str"),
-    (3, "contentType", "str"),
-    (4, "protocol", "str"),
-    (5, "reply", "str"),
-    (6, "QOS", "varint"),
-    (7, "retain", "bool"),
-    (8, "payload", "bytes"),
-)
-
 DECODED_SCHEMA = (
     "publisher string, channel string, contentType string, protocol string, "
     "reply string, QOS int, retain boolean, payload binary"
 )
+
+
+# One-byte varints, precomputed: every length below 128 (the channel, the
+# constant envelope fields, short payloads) is a table lookup.
+_LEN1 = tuple(bytes((n,)) for n in range(128))
+
+
+def _varint(n: int) -> bytes:
+    """Protobuf base-128 varint of a non-negative int."""
+    if 0 <= n < 128:
+        return _LEN1[n]
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    out.append(n)  # a negative n raises here
+    return bytes(out)
 
 
 def encode_cdcmsg(
@@ -48,96 +53,113 @@ def encode_cdcmsg(
     payload: bytes,
 ) -> bytes:
     """Encode one CDCMsg to protobuf wire bytes (plain-Python entry point,
-    used by the NATS sink and tests)."""
-    out = bytearray()
-
-    def varint(n: int) -> None:
-        while True:
-            b = n & 0x7F
-            n >>= 7
-            if n:
-                out.append(b | 0x80)
-            else:
-                out.append(b)
-                return
-
-    def ld(field: int, data: bytes) -> None:
-        varint((field << 3) | 2)
-        varint(len(data))
-        out.extend(data)
-
-    for num, _, kind, value in (
-        (1, "publisher", "str", publisher),
-        (2, "channel", "str", channel),
-        (3, "contentType", "str", content_type),
-        (4, "protocol", "str", protocol),
-        (5, "reply", "str", reply),
-        (6, "QOS", "varint", qos),
-        (7, "retain", "bool", retain),
-        (8, "payload", "bytes", payload),
-    ):
-        if kind == "str":
-            if value:
-                ld(num, value.encode("utf-8") if isinstance(value, str) else value)
-        elif kind == "bytes":
-            if value:
-                ld(num, bytes(value))
-        else:  # varint / bool
-            iv = int(value)
-            if iv:
-                varint((num << 3) | 0)
-                varint(iv)
-    return bytes(out)
+    used by the client facade and tests). String fields may also be passed
+    as bytes. Straight-line on purpose: each field is its precomputed key
+    byte ``(field << 3) | type``, its length and its data, and the message
+    is one ``b"".join``."""
+    parts: list = []
+    if publisher:
+        data = publisher.encode("utf-8") if isinstance(publisher, str) else publisher
+        n = len(data)
+        parts += (b"\x0a", _LEN1[n] if n < 128 else _varint(n), data)
+    if channel:
+        data = channel.encode("utf-8") if isinstance(channel, str) else channel
+        n = len(data)
+        parts += (b"\x12", _LEN1[n] if n < 128 else _varint(n), data)
+    if content_type:
+        data = content_type.encode("utf-8") if isinstance(content_type, str) else content_type
+        n = len(data)
+        parts += (b"\x1a", _LEN1[n] if n < 128 else _varint(n), data)
+    if protocol:
+        data = protocol.encode("utf-8") if isinstance(protocol, str) else protocol
+        n = len(data)
+        parts += (b"\x22", _LEN1[n] if n < 128 else _varint(n), data)
+    if reply:
+        data = reply.encode("utf-8") if isinstance(reply, str) else reply
+        n = len(data)
+        parts += (b"\x2a", _LEN1[n] if n < 128 else _varint(n), data)
+    qos = int(qos)
+    if qos:
+        parts += (b"\x30", _varint(qos))
+    retain = int(retain)
+    if retain:
+        parts += (b"\x38", _varint(retain))
+    if payload:
+        data = bytes(payload)
+        n = len(data)
+        parts += (b"\x42", _LEN1[n] if n < 128 else _varint(n), data)
+    return b"".join(parts)
 
 
 def decode_cdcmsg(data: bytes) -> dict:
-    """Decode protobuf wire bytes into a CDCMsg dict (defaults filled)."""
-    msg = {
-        "publisher": "",
-        "channel": "",
-        "contentType": "",
-        "protocol": "",
-        "reply": "",
-        "QOS": 0,
-        "retain": False,
-        "payload": b"",
-    }
-    by_num = {num: (name, kind) for num, name, kind in FIELDS}
-    i, n = 0, len(data)
+    """Decode protobuf wire bytes into a CDCMsg dict (defaults filled).
 
-    def varint() -> int:
-        nonlocal i
-        shift = res = 0
-        while True:
+    The same flat shape as the ``nats_cdc`` readers' decoder: inlined
+    varints and positional field dispatch. Unknown field numbers are
+    consumed and dropped; wire types other than varint (0) and
+    length-delimited (2) are refused, because misreading a fixed32/fixed64
+    field would shift the cursor and corrupt every later field."""
+    pub = ch = ct = pr = rp = ""
+    qos = 0
+    ret = False
+    pay = b""
+    i, n = 0, len(data)
+    while i < n:
+        b = data[i]
+        i += 1
+        key = b & 0x7F
+        shift = 7
+        while b & 0x80:
             b = data[i]
             i += 1
-            res |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return res
+            key |= (b & 0x7F) << shift
             shift += 7
-
-    while i < n:
-        key = varint()
-        num, wtype = key >> 3, key & 0x07
-        if wtype == 0:
-            val = varint()
-        elif wtype == 2:
-            ln = varint()
+        num = key >> 3
+        wtype = key & 7
+        if wtype == 2:
+            b = data[i]
+            i += 1
+            ln = b & 0x7F
+            shift = 7
+            while b & 0x80:
+                b = data[i]
+                i += 1
+                ln |= (b & 0x7F) << shift
+                shift += 7
             val = data[i : i + ln]
             i += ln
-        else:  # unknown wire type: stop rather than misparse
+            if num == 8:
+                pay = bytes(val)
+            elif num == 1:
+                pub = val.decode("utf-8")
+            elif num == 2:
+                ch = val.decode("utf-8")
+            elif num == 3:
+                ct = val.decode("utf-8")
+            elif num == 4:
+                pr = val.decode("utf-8")
+            elif num == 5:
+                rp = val.decode("utf-8")
+        elif wtype == 0:
+            b = data[i]
+            i += 1
+            v = b & 0x7F
+            shift = 7
+            while b & 0x80:
+                b = data[i]
+                i += 1
+                v |= (b & 0x7F) << shift
+                shift += 7
+            if num == 6:
+                qos = v
+            elif num == 7:
+                ret = bool(v)
+        else:
             raise ValueError(f"unsupported wire type {wtype}")
-        if num in by_num:
-            name, kind = by_num[num]
-            if kind == "str":
-                msg[name] = val.decode("utf-8")
-            elif kind == "bytes":
-                msg[name] = bytes(val)
-            elif kind == "bool":
-                msg[name] = bool(val)
-            else:
-                msg[name] = val
-    return msg
+    return {
+        "publisher": pub, "channel": ch, "contentType": ct, "protocol": pr,
+        "reply": rp, "QOS": qos, "retain": ret, "payload": pay,
+    }
 
 
 def decode_col(col: Column) -> Column:

@@ -171,7 +171,7 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if bid != seen_batch:
                     seen_batch = bid
                     break
-                time.sleep(0.005)
+                time.sleep(0.02)  # idle subscriber: poll, do not spin
     finally:
         sub_q.stop()
     return spark.table(name).withColumn(

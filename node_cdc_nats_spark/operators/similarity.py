@@ -974,9 +974,15 @@ def _lloyd_centroids(em: DataFrame, opname: str) -> "list[list[float]] | None":
     is ONE fused Arrow pass over the embedding column only
     (:func:`_lloyd_stats_fn`) plus a K·D-group final aggregate — the
     driver still sees exactly K·D sums per round, never vectors."""
+    # One NULL/empty-skipping frame feeds both the init rows and the Lloyd
+    # pass, so a dirty row among the lowest vec_ids cannot crash the init.
+    # The explicit isNotNull conjunct matters: size() is the legacy
+    # null-tolerant form (returns -1 on NULL), so alone it filters NULLs
+    # but gives the scan nothing to push; isnotnull reaches PushedFilters.
+    clean = em.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
     cents = [
         [float(v) for v in r.embedding]
-        for r in em.orderBy("vec_id").limit(IVF_K).collect()
+        for r in clean.orderBy("vec_id").limit(IVF_K).collect()
     ]
     if not cents:
         return None
@@ -990,12 +996,7 @@ def _lloyd_centroids(em: DataFrame, opname: str) -> "list[list[float]] | None":
     # contract (pinned by test_lloyd_null_embedding_rows_are_skipped); a
     # non-finite ELEMENT inside a well-formed vector still fails loudly in
     # assign_stats.
-    # The explicit isNotNull conjunct matters: size() is the legacy
-    # null-tolerant form (returns -1 on NULL), so alone it filters NULLs
-    # but gives the scan nothing to push; isnotnull reaches PushedFilters.
-    emb_only = em.filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-    ).select("embedding")
+    emb_only = clean.select("embedding")
     for _ in range(IVF_ITERS):
         stats = (
             emb_only.mapInPandas(

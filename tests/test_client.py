@@ -565,3 +565,86 @@ def test_graph_quality_example_runs(spark):
         "modularity_q_micro": 0,
         "kcore_nodes": 0,
     }
+
+
+# -- dispatch through the route table (channel -> matching sids) ---------------
+def test_sub_added_in_callback_gets_the_next_message_not_the_current():
+    # The registry scan the reference runs per message fixes its sid set
+    # when dispatch starts; a sub registered by a callback joins from the
+    # next message on (and the cached route for the channel is refreshed).
+    nats = connect()
+    late: list[bytes] = []
+
+    def first(m):
+        if not late and m["payload"] == b"0":
+            nats.subscribe("s/#", lambda m2: late.append(m2["payload"]))
+
+    nats.subscribe("s/#", first)
+    for i in range(3):
+        nats.publish("x", env("s/a", str(i).encode()))
+    assert late == [b"1", b"2"]
+
+
+def test_sub_removed_by_earlier_callback_is_not_delivered():
+    nats = connect()
+    got: list[str] = []
+    sids: list[int] = []
+
+    def remover(m):
+        got.append("remover")
+        nats.unsubscribe(sids[1])
+
+    sids.append(nats.subscribe("s/#", remover))
+    sids.append(nats.subscribe("s/+", lambda m: got.append("victim")))
+    nats.publish("x", env("s/a"))  # the route for s/a is filled here
+    nats.publish("x", env("s/a"))
+    assert got == ["remover", "remover"]
+
+
+def test_max_stays_inclusive_through_cached_routes():
+    nats = connect()
+    bounded: list[int] = []
+    tap: list[int] = []
+    sid = nats.subscribe("s/#", {"max": 3}, lambda m: bounded.append(int(m["payload"])))
+    nats.subscribe("s/a", lambda m: tap.append(int(m["payload"])))
+    late = nats.subscribe("s/#", lambda m: None)
+    for i in range(6):
+        if i == 2:
+            nats.unsubscribe(late, 1)  # bound armed after the route was cached
+        nats.publish("x", env("s/a", str(i).encode()))
+    assert bounded == [0, 1, 2]
+    assert tap == [0, 1, 2, 3, 4, 5]
+    assert sid not in nats.subs and late not in nats.subs
+
+
+def test_more_channels_than_the_route_cap_still_deliver():
+    from node_cdc_nats_spark import client
+
+    nats = connect()
+    got: dict[str, list[str]] = {"even": [], "all": []}
+    nats.subscribe("c/+/even", lambda m: got["even"].append(m["channel"]))
+    nats.subscribe("c/#", lambda m: got["all"].append(m["channel"]))
+    channels = [f"c/{i}/{'even' if i % 2 == 0 else 'odd'}" for i in range(client._ROUTE_CAP + 50)]
+    for _ in range(2):
+        for ch in channels:
+            nats.publish("x", env(ch))
+    assert len(nats._routes) <= client._ROUTE_CAP
+    assert got["all"] == channels * 2
+    assert got["even"] == [ch for ch in channels if ch.endswith("even")] * 2
+
+
+def test_uninspectable_callable_gets_all_three_arguments():
+    class Callback:
+        __signature__ = "unreadable"  # inspect.signature raises TypeError
+
+        def __init__(self):
+            self.calls: list[tuple] = []
+
+        def __call__(self, *args):
+            self.calls.append(args)
+
+    nats = connect()
+    cb = Callback()
+    sid = nats.subscribe("a/#", cb)
+    nats.publish("x", env("a/b"))
+    assert [(m["channel"], subj, s) for m, subj, s in cb.calls] == [("a/b", "a/#", sid)]

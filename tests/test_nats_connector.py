@@ -692,3 +692,35 @@ def test_simple_reader_drains_multi_frame_segment(spark, tmp_path):
     assert drain() == sorted(f"m{i}" for i in range(9))
     # restart on the same checkpoint: cursor at segment end → no duplicates
     assert drain() == sorted(f"m{i}" for i in range(9))
+
+
+def test_sink_varint_gate_matches_scalar_encoder(tmp_path, monkeypatch):
+    """The sink omits a varint field exactly when ``encode_cdcmsg`` does:
+    the gate is the converted integer, so a value that is truthy but whose
+    int() is 0 (a fractional QOS column) writes no field. Drives the
+    writer's ``write`` directly with a stub task context."""
+    import pyarrow as pa
+    import pyspark
+
+    from node_cdc_nats_spark.sources.nats import _make_datasource_cls, read_frames
+
+    class Task:
+        @staticmethod
+        def taskAttemptId():
+            return 7
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Task))
+    rows = [("a/1", 0.5, False, b"x"), ("a/2", 2.0, True, b"y"), ("a/3", None, None, b"z")]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(col) for col in zip(*rows)],
+        names=["channel", "QOS", "retain", "payload"],
+    )
+    spool = tmp_path / "spool"
+    writer = _make_datasource_cls()({"spool": str(spool)}).streamWriter(None, False)
+    writer.write(iter([batch]))
+    (seg,) = spool.iterdir()
+    got = [env for _, env in read_frames(str(seg))]
+    assert got == [
+        encode_cdcmsg("", ch, "", "", "", qos or 0, retain or False, pay)
+        for ch, qos, retain, pay in rows
+    ]

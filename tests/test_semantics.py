@@ -313,7 +313,9 @@ def test_lloyd_null_embedding_rows_are_skipped(spark):
         (i, [float(i % 7) + 0.25 * j for j in range(dim)])
         for i in range(IVF_K + 8)
     ]
-    dirty_rows = clean_rows + [(1000, None), (1001, [])]
+    # Dirty rows past the init window, and inside it: vec_ids -2 and -1
+    # sort before every clean row, so they are among the lowest IVF_K.
+    dirty_rows = clean_rows + [(1000, None), (1001, []), (-2, None), (-1, [])]
     schema = "vec_id bigint, embedding array<double>"
     clean = spark.createDataFrame(clean_rows, schema)
     dirty = spark.createDataFrame(dirty_rows, schema)
