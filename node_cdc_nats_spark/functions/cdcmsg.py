@@ -8,21 +8,43 @@ declaration order visible at `examples/cdc-pub.js:31-40`). The wire format
 itself is the public protobuf encoding: varint keys ``(field << 3) | type``,
 type 0 varints for int32/bool, type 2 length-delimited for string/bytes.
 
-Spark integration is Arrow-vectorized (`pandas_udf` over binary columns) —
-encode/decode are per-row projections, map-side only, no shuffle at any
-scale. Like protobufjs, zero-valued scalar fields are omitted on encode and
-default on decode, so roundtrips are canonical and the engine's encoder is
-byte-stable for hashing.
+This module is the only place that knows that layout. It has one decoder,
+``decode_fields`` (``decode_cdcmsg`` is a dict over it), and two encoders:
+the scalar ``encode_cdcmsg`` for the client facade and the columnar
+``encode_columns`` for Arrow batches and pandas columns. Like protobufjs,
+zero-valued scalar fields are omitted on encode and default on decode, so
+roundtrips are canonical and the encoders are byte-stable for hashing.
+
+The code here runs on Spark's Python workers (the ``encode_col``/
+``decode_col`` pandas UDFs and the ``nats_cdc`` connector), which do not
+have this package on ``sys.path``. The module is therefore registered with
+cloudpickle to be pickled by value: functions and classes defined here are
+shipped inside the task, not imported by name on the worker.
 """
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column, functions as F
 
-DECODED_SCHEMA = (
-    "publisher string, channel string, contentType string, protocol string, "
-    "reply string, QOS int, retain boolean, payload binary"
-)
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+# The CDCMsg fields in field-number order (field k is FIELDS[k - 1]) and
+# their Spark SQL types. The SQL type also fixes the wire type: int and
+# boolean are varints, string and binary are length-delimited.
+FIELDS = ("publisher", "channel", "contentType", "protocol", "reply", "QOS", "retain", "payload")
+_SQL_TYPES = ("string", "string", "string", "string", "string", "int", "boolean", "binary")
+DECODED_SCHEMA = ", ".join(f"{name} {sql}" for name, sql in zip(FIELDS, _SQL_TYPES))
+
+
+def decoded_arrow_schema():
+    """``DECODED_SCHEMA`` as a pyarrow schema."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "int": pa.int32(), "boolean": pa.bool_(), "binary": pa.binary()}
+    return pa.schema([(name, types[sql]) for name, sql in zip(FIELDS, _SQL_TYPES)])
 
 
 # One-byte varints, precomputed: every length below 128 (the channel, the
@@ -91,74 +113,135 @@ def encode_cdcmsg(
     return b"".join(parts)
 
 
-def decode_cdcmsg(data: bytes) -> dict:
-    """Decode protobuf wire bytes into a CDCMsg dict (defaults filled).
+def encode_columns(columns: dict, n: int) -> list[bytes]:
+    """Encode ``n`` CDCMsgs given column-wise: ``columns`` maps field names
+    to equal-length lists of Python values. A field missing from
+    ``columns``, and a None or zero cell, is omitted from the wire, as
+    ``encode_cdcmsg`` omits a default value; the output is byte-identical
+    to ``encode_cdcmsg`` row by row.
 
-    The same flat shape as the ``nats_cdc`` readers' decoder: inlined
-    varints and positional field dispatch. Unknown field numbers are
-    consumed and dropped; wire types other than varint (0) and
-    length-delimited (2) are refused, because misreading a fixed32/fixed64
-    field would shift the cursor and corrupt every later field."""
+    Each field's wire segment (key + length varint + data) is rendered once
+    per distinct value per call and reused: the envelope's constant fields
+    (publisher, contentType, protocol) hit the cache on every row,
+    low-cardinality columns (channel) almost always, and unique payloads
+    cost one extra dict probe. The cache lives for one call, so its memory
+    is bounded by the batch."""
+    segs = []
+    for num, (name, sql) in enumerate(zip(FIELDS, _SQL_TYPES), 1):
+        col = columns.get(name)
+        if col is None:
+            continue
+        if sql in ("int", "boolean"):
+            key = _LEN1[num << 3]
+            # Gate on the integer, as encode_cdcmsg does: a value whose
+            # int() is 0 (0.5, "0") is omitted.
+            segs.append([key + _varint(int(v)) if v and int(v) else b"" for v in col])
+            continue
+        key = _LEN1[(num << 3) | 2]
+        cache: dict = {}
+        get = cache.get
+        seg = []
+        ap = seg.append
+        for v in col:
+            if not v:
+                ap(b"")
+                continue
+            s = get(v)
+            if s is None:
+                data = v.encode("utf-8") if isinstance(v, str) else bytes(v)
+                s = cache[v] = key + _varint(len(data)) + data
+            ap(s)
+        segs.append(seg)
+    if not segs:
+        return [b""] * n
+    return [b"".join(parts) for parts in zip(*segs)]
+
+
+def decode_fields(data: bytes) -> tuple:
+    """Decode protobuf wire bytes into the CDCMsg field values, a tuple in
+    ``FIELDS`` order with defaults filled; ``payload`` is a slice of
+    ``data``.
+
+    A flat loop with inlined varints, no per-message dict or closure.
+    Every key and length varint is tested for a one-byte value first, and
+    fields dispatch on the whole key byte ``(field << 3) | type``, so a
+    known field number that arrives with the wrong wire type is skipped
+    like an unknown field. Unknown fields are consumed and dropped; wire
+    types other than varint (0) and length-delimited (2) are refused,
+    because misreading a fixed32/fixed64 field would shift the cursor and
+    corrupt every later field."""
     pub = ch = ct = pr = rp = ""
     qos = 0
     ret = False
     pay = b""
     i, n = 0, len(data)
     while i < n:
-        b = data[i]
+        key = data[i]
         i += 1
-        key = b & 0x7F
-        shift = 7
-        while b & 0x80:
-            b = data[i]
-            i += 1
-            key |= (b & 0x7F) << shift
-            shift += 7
-        num = key >> 3
+        if key & 0x80:
+            key &= 0x7F
+            shift = 7
+            b = 0x80
+            while b & 0x80:
+                b = data[i]
+                i += 1
+                key |= (b & 0x7F) << shift
+                shift += 7
         wtype = key & 7
         if wtype == 2:
-            b = data[i]
+            ln = data[i]
             i += 1
-            ln = b & 0x7F
-            shift = 7
-            while b & 0x80:
-                b = data[i]
-                i += 1
-                ln |= (b & 0x7F) << shift
-                shift += 7
+            if ln & 0x80:
+                ln &= 0x7F
+                shift = 7
+                b = 0x80
+                while b & 0x80:
+                    b = data[i]
+                    i += 1
+                    ln |= (b & 0x7F) << shift
+                    shift += 7
             val = data[i : i + ln]
             i += ln
-            if num == 8:
-                pay = bytes(val)
-            elif num == 1:
+            if key == 0x42:
+                pay = val
+            elif key == 0x0A:
                 pub = val.decode("utf-8")
-            elif num == 2:
+            elif key == 0x12:
                 ch = val.decode("utf-8")
-            elif num == 3:
+            elif key == 0x1A:
                 ct = val.decode("utf-8")
-            elif num == 4:
+            elif key == 0x22:
                 pr = val.decode("utf-8")
-            elif num == 5:
+            elif key == 0x2A:
                 rp = val.decode("utf-8")
         elif wtype == 0:
-            b = data[i]
+            v = data[i]
             i += 1
-            v = b & 0x7F
-            shift = 7
-            while b & 0x80:
-                b = data[i]
-                i += 1
-                v |= (b & 0x7F) << shift
-                shift += 7
-            if num == 6:
+            if v & 0x80:
+                v &= 0x7F
+                shift = 7
+                b = 0x80
+                while b & 0x80:
+                    b = data[i]
+                    i += 1
+                    v |= (b & 0x7F) << shift
+                    shift += 7
+            if key == 0x30:
                 qos = v
-            elif num == 7:
+            elif key == 0x38:
                 ret = bool(v)
         else:
             raise ValueError(f"unsupported wire type {wtype}")
+    return pub, ch, ct, pr, rp, qos, ret, pay
+
+
+def decode_cdcmsg(data: bytes) -> dict:
+    """Decode protobuf wire bytes into a CDCMsg dict (defaults filled);
+    ``payload`` is ``bytes`` whatever bytes-like type ``data`` is."""
+    pub, ch, ct, pr, rp, qos, ret, pay = decode_fields(data)
     return {
         "publisher": pub, "channel": ch, "contentType": ct, "protocol": pr,
-        "reply": rp, "QOS": qos, "retain": ret, "payload": pay,
+        "reply": rp, "QOS": qos, "retain": ret, "payload": bytes(pay),
     }
 
 
@@ -167,64 +250,9 @@ def decode_col(col: Column) -> Column:
 
     @F.pandas_udf(DECODED_SCHEMA)
     def _decode(series):
-        # Self-contained (executors lack the repo on sys.path): re-declare
-        # the tiny decoder inside the closure.
         import pandas as pd
 
-        def dec(data):
-            msg = {
-                "publisher": "", "channel": "", "contentType": "",
-                "protocol": "", "reply": "", "QOS": 0, "retain": False,
-                "payload": b"",
-            }
-            kinds = {
-                1: ("publisher", "str"), 2: ("channel", "str"),
-                3: ("contentType", "str"), 4: ("protocol", "str"),
-                5: ("reply", "str"), 6: ("QOS", "varint"),
-                7: ("retain", "bool"), 8: ("payload", "bytes"),
-            }
-            i, n = 0, len(data)
-
-            def varint():
-                nonlocal i
-                shift = res = 0
-                while True:
-                    b = data[i]
-                    i += 1
-                    res |= (b & 0x7F) << shift
-                    if not b & 0x80:
-                        return res
-                    shift += 7
-
-            while i < n:
-                key = varint()
-                num, wtype = key >> 3, key & 0x07
-                if wtype == 0:
-                    val = varint()
-                elif wtype == 2:
-                    ln = varint()
-                    val = data[i : i + ln]
-                    i += ln
-                else:
-                    # fixed64 (1) / fixed32 (5) / groups never appear in a
-                    # CDCMsg; treating them as length-delimited would shift
-                    # the cursor and silently misparse every later field —
-                    # mirror decode_cdcmsg and refuse the message instead.
-                    raise ValueError(f"unsupported wire type {wtype}")
-                if num in kinds:
-                    name, kind = kinds[num]
-                    if kind == "str":
-                        msg[name] = val.decode("utf-8")
-                    elif kind == "bytes":
-                        msg[name] = bytes(val)
-                    elif kind == "bool":
-                        msg[name] = bool(val)
-                    else:
-                        msg[name] = val
-            return msg
-
-        rows = [dec(bytes(b)) for b in series]
-        return pd.DataFrame(rows)
+        return pd.DataFrame([decode_fields(b) for b in series], columns=FIELDS)
 
     return _decode(col)
 
@@ -237,40 +265,6 @@ def encode_col(struct: Column) -> Column:
     def _encode(pdf):
         import pandas as pd
 
-        def varint_bytes(n):
-            out = bytearray()
-            while True:
-                b = n & 0x7F
-                n >>= 7
-                if n:
-                    out.append(b | 0x80)
-                else:
-                    out.append(b)
-                    return bytes(out)
-
-        def enc(row):
-            out = bytearray()
-            for num, name, kind in (
-                (1, "publisher", "str"), (2, "channel", "str"),
-                (3, "contentType", "str"), (4, "protocol", "str"),
-                (5, "reply", "str"), (6, "QOS", "varint"),
-                (7, "retain", "bool"), (8, "payload", "bytes"),
-            ):
-                value = row[name]
-                if kind in ("str", "bytes"):
-                    if value is not None and len(value) != 0:
-                        data = value.encode("utf-8") if isinstance(value, str) else bytes(value)
-                        out += varint_bytes((num << 3) | 2)
-                        out += varint_bytes(len(data))
-                        out += data
-                else:
-                    iv = int(value) if value is not None else 0
-                    if iv:
-                        out += varint_bytes((num << 3) | 0)
-                        out += varint_bytes(iv)
-            return bytes(out)
-
-        # to_dict("records") beats iterrows ~10× (no per-row Series alloc).
-        return pd.Series([enc(row) for row in pdf.to_dict("records")])
+        return pd.Series(encode_columns({f: pdf[f].tolist() for f in FIELDS}, len(pdf)), dtype=object)
 
     return _encode(struct)

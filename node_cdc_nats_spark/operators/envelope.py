@@ -93,12 +93,10 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reader's multi-segment offset path is covered separately by the
     # durable-offset resume test (tests/test_nats_connector.py). 5 batches
     # of Python-datasource writer startup cost ~7s of pure overhead here.
-    # r9: the spool is a SEGMENT store (length-prefixed frames, one file
-    # per writer partition per batch — the JetStream file-store shape;
-    # sources/nats.py). The r8 layout paid a create+write+rename PER
-    # MESSAGE (100k messages ≈ 8.5 s of syscalls single-threaded — the
-    # r8 profile and VERDICT's one `weak`); segments amortize that to 4
-    # files total here, wire format untouched, reader offsets now
+    # The spool is a SEGMENT store (length-prefixed frames, one file per
+    # writer partition per batch — the JetStream file-store shape;
+    # sources/nats.py), so this publish writes 4 files in total rather
+    # than a create+write+rename per message; reader offsets are
     # (segment, byte-offset).
     env_stream = _envelope_cols(read_events_stream(spark, sf_dir, single_batch=True))
     ckpt = _ckpt_dir()
@@ -114,7 +112,7 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # out of lexicographic order; the reader's offsets encode the DRAINED
     # SET (frontier gated below pending writer intents + an exception
     # list), not a bare max-name cursor, so a late lower-named segment is
-    # still planned exactly once (ADVICE r9 fix, sources/nats.py) and
+    # still planned exactly once (sources/nats.py) and
     # count==expected ⇒ exactly-once.
     expected = load_table(spark, sf_dir, "events").count()
     sub = (
@@ -142,18 +140,16 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         pub.awaitTermination()
         deadline = time.monotonic() + 300
-        # Drain detection (r14): the old loop ran a Spark count() job on
-        # the memory sink every 20 ms — each poll a full LocalTableScan
-        # job, most of them before the drain could possibly have finished.
-        # The count is now gated on PROGRESS: only re-count after the
-        # subscriber completes another micro-batch (lastProgress advances
-        # — reading it is a driver-local getter, no job), so the loop
-        # costs one count per completed batch instead of one per 20 ms.
+        # Drain detection: a count() on the memory sink is a full
+        # LocalTableScan job, so it is gated on PROGRESS: re-count only
+        # after the subscriber completes another micro-batch (lastProgress
+        # advances — reading it is a driver-local getter, no job). The
+        # loop costs one count per completed batch, not one per poll.
         seen_batch = -1
         while spark.table(name).count() < expected:
             if not sub_q.isActive:
                 # Surface the subscriber's own failure instead of letting
-                # the deadline mask it as a TimeoutError (ADVICE r9).
+                # the deadline mask it as a TimeoutError.
                 exc = sub_q.exception()
                 if exc is not None:
                     raise exc

@@ -1,5 +1,5 @@
-"""Client-facade micro-benchmark: the scalar CDCMsg codec and the facade's
-publish -> dispatch path, measured on their own, without Spark.
+"""Client-facade micro-benchmark: the CDCMsg codec, the spool read path and
+the facade's publish -> dispatch path, measured on their own, without Spark.
 
 Usage: python scripts/facade_microbench.py [--seed N] [--msgs N] [--seconds S]
 
@@ -9,13 +9,19 @@ payloads, mean fan-out about 1.36). Prints, for the code in this checkout:
 
   encode_us          µs per ``encode_cdcmsg`` call (``make_envelope``'s fields)
   decode_us          µs per ``decode_cdcmsg`` call
+  columnar_encode_us µs per message of ``encode_columns`` (the ``nats_cdc``
+                     sink's and ``encode_col``'s encoder) on the same
+                     messages as Python list columns, in one call
+  spool_read_us      µs per message of ``read_frames`` + ``decode_fields``
+                     (the ``nats_cdc`` readers' path) over one spool
+                     segment holding the messages
   dispatch_us        µs per ``CdcNats.publish`` of a pre-encoded envelope:
                      decode, route lookup and delivery to every matching
                      subscription (route table warm)
   facade_msgs_per_s  ``make_envelope`` + ``publish`` + delivery, over
                      ``--seconds`` of publishing in ``--msgs`` cycles
 
-Codec and dispatch figures are the median of 7 passes over ``--msgs``
+Codec, spool and dispatch figures are the median of 7 passes over ``--msgs``
 messages. Every delivery of every dispatch pass and facade cycle is
 checked against the pure-Python MQTT matcher (exactly once, same bytes);
 the script exits non-zero on any failure.
@@ -28,12 +34,19 @@ import os
 import platform
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from node_cdc_nats_spark import client  # noqa: E402
-from node_cdc_nats_spark.functions.cdcmsg import decode_cdcmsg, encode_cdcmsg  # noqa: E402
+from node_cdc_nats_spark.functions.cdcmsg import (  # noqa: E402
+    decode_cdcmsg,
+    decode_fields,
+    encode_cdcmsg,
+    encode_columns,
+)
+from node_cdc_nats_spark.sources.nats import frame_messages, read_frames  # noqa: E402
 from perfbench import gen  # noqa: E402
 from perfbench.checks import check_deliveries, expected_deliveries  # noqa: E402
 
@@ -74,6 +87,23 @@ def main() -> int:
         lambda: [encode_cdcmsg("nms", c, "json", "http", "", 0, False, p) for c, p in zip(chans, pays)], n
     )
     decode_us = _per_msg_us(lambda: [decode_cdcmsg(w) for w in wires], n)
+    columns = {
+        "publisher": ["nms"] * n, "channel": chans, "contentType": ["json"] * n,
+        "protocol": ["http"] * n, "reply": [""] * n, "QOS": [0] * n,
+        "retain": [False] * n, "payload": pays,
+    }
+    if encode_columns(columns, n) != wires:
+        print("FAIL columnar encode: envelopes differ from encode_cdcmsg", file=sys.stderr)
+        failures += 1
+    columnar_encode_us = _per_msg_us(lambda: encode_columns(columns, n), n)
+    with tempfile.TemporaryDirectory() as spool:
+        seg = os.path.join(spool, "0000000000000001-bench.seg")
+        with open(seg, "wb") as fh:
+            fh.write(frame_messages(wires))
+        if [env for _, env in read_frames(seg)] != wires:
+            print("FAIL spool read: frames differ from the written envelopes", file=sys.stderr)
+            failures += 1
+        spool_read_us = _per_msg_us(lambda: [decode_fields(env) for _, env in read_frames(seg)], n)
 
     got: list = []
 
@@ -113,6 +143,8 @@ def main() -> int:
           f"copies per message: {len(want) / n:.2f}")
     print(f"encode_us          {encode_us:10.3f} us/msg")
     print(f"decode_us          {decode_us:10.3f} us/msg")
+    print(f"columnar_encode_us {columnar_encode_us:10.3f} us/msg")
+    print(f"spool_read_us      {spool_read_us:10.3f} us/msg")
     print(f"dispatch_us        {dispatch_us:10.3f} us/msg")
     print(f"facade_msgs_per_s  {n * cycles / busy_s:10.0f} msgs/s ({cycles} cycles, {busy_s:.2f} s)")
     print(f"failed deliveries  {failures:10d}")

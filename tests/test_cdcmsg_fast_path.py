@@ -1,5 +1,6 @@
 """The straight-line scalar CDCMsg codec against a plain per-field
-reference codec kept here, so any byte the fast paths change shows up.
+reference codec kept here, so any byte the fast paths change shows up, and
+the columnar encoder against the scalar one.
 
 The reference encoder below is the loop-per-field form the codec had
 before its fast paths (varint helper, one ``bytearray``); the reference
@@ -13,7 +14,7 @@ from __future__ import annotations
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from node_cdc_nats_spark.functions.cdcmsg import decode_cdcmsg, encode_cdcmsg
+from node_cdc_nats_spark.functions.cdcmsg import decode_cdcmsg, encode_cdcmsg, encode_columns
 
 NAMES = ("publisher", "channel", "contentType", "protocol", "reply", "QOS", "retain", "payload")
 ZERO = ("", "", "", "", "", 0, False, b"")  # every field at its default
@@ -120,6 +121,35 @@ def test_encoder_is_byte_identical_and_roundtrips(values):
     wire = encode_cdcmsg(*values)
     assert wire == reference_encode(*values)
     assert decode_cdcmsg(wire) == reference_decode(wire) == _expected(values)
+
+
+# Batch rows as an Arrow batch or pandas frame hands them to the columnar
+# encoder: any cell may be None, and a QOS column may hold floats.
+nullable_row = st.tuples(
+    *[st.one_of(st.none(), str_field)] * 5,
+    st.one_of(
+        st.none(),
+        st.integers(min_value=0, max_value=2**31 - 1),
+        st.floats(min_value=0, max_value=2**31 - 1, allow_nan=False),
+    ),
+    st.one_of(st.none(), st.booleans()),
+    st.one_of(st.none(), st.binary(max_size=300)),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(rows=st.lists(nullable_row, max_size=20), dropped=st.sets(st.sampled_from(NAMES)))
+def test_columnar_encoder_matches_scalar_row_by_row(rows, dropped):
+    # A column missing from the batch and a None cell both take the
+    # field's default, which the scalar encoder omits from the wire.
+    columns = {name: [row[k] for row in rows] for k, name in enumerate(NAMES) if name not in dropped}
+    expected = [
+        encode_cdcmsg(*(
+            ZERO[k] if v is None or NAMES[k] in dropped else v for k, v in enumerate(row)
+        ))
+        for row in rows
+    ]
+    assert encode_columns(columns, len(rows)) == expected
 
 
 @settings(max_examples=200, deadline=None)

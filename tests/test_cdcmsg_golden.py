@@ -17,7 +17,29 @@ node-cdc-proto package, yarn.lock:98-103).
 
 from __future__ import annotations
 
-from node_cdc_nats_spark.functions.cdcmsg import decode_cdcmsg, encode_cdcmsg
+from node_cdc_nats_spark.functions.cdcmsg import (
+    FIELDS,
+    decode_cdcmsg,
+    decode_fields,
+    encode_cdcmsg,
+    encode_columns,
+)
+
+
+def _encode_columnar(*values) -> bytes:
+    """The columnar encoder on one-row columns."""
+    (wire,) = encode_columns({name: [v] for name, v in zip(FIELDS, values)}, 1)
+    return wire
+
+
+def _decode_fields_dict(data: bytes) -> dict:
+    return dict(zip(FIELDS, decode_fields(data)))
+
+
+# Every codec entry point is pinned to the same golden bytes; each test
+# runs all of them, so the test ids stay one per fixture.
+ENCODERS = {"encode_cdcmsg": encode_cdcmsg, "encode_columns": _encode_columnar}
+DECODERS = {"decode_cdcmsg": decode_cdcmsg, "decode_fields": _decode_fields_dict}
 
 
 def _ld(field: int, data: bytes) -> bytes:
@@ -63,48 +85,54 @@ LONG_GOLDEN = (
 
 
 def test_encode_matches_pub_js_golden():
-    got = encode_cdcmsg(
-        "nms", "/nms/v1/event", "json", "http", "", 0, False, b'{"test":123}'
-    )
-    assert got == PUB_JS_GOLDEN
+    for name, encode in ENCODERS.items():
+        got = encode(
+            "nms", "/nms/v1/event", "json", "http", "", 0, False, b'{"test":123}'
+        )
+        assert got == PUB_JS_GOLDEN, name
 
 
 def test_decode_matches_pub_js_golden():
-    msg = decode_cdcmsg(PUB_JS_GOLDEN)
-    assert msg == {
-        "publisher": "nms",
-        "channel": "/nms/v1/event",
-        "contentType": "json",
-        "protocol": "http",
-        "reply": "",
-        "QOS": 0,
-        "retain": False,
-        "payload": b'{"test":123}',
-    }
+    for name, decode in DECODERS.items():
+        msg = decode(PUB_JS_GOLDEN)
+        assert msg == {
+            "publisher": "nms",
+            "channel": "/nms/v1/event",
+            "contentType": "json",
+            "protocol": "http",
+            "reply": "",
+            "QOS": 0,
+            "retain": False,
+            "payload": b'{"test":123}',
+        }, name
 
 
 def test_all_fields_roundtrip_golden():
-    got = encode_cdcmsg(
-        "nms", "/nms/v1/rpc", "json", "mqtt", "_INBOX.abc", 1, True, b"\x00\x01\xff"
-    )
-    assert got == ALL_FIELDS_GOLDEN
-    msg = decode_cdcmsg(ALL_FIELDS_GOLDEN)
-    assert msg["reply"] == "_INBOX.abc"
-    assert msg["QOS"] == 1
-    assert msg["retain"] is True
-    assert msg["payload"] == b"\x00\x01\xff"
+    for name, encode in ENCODERS.items():
+        got = encode(
+            "nms", "/nms/v1/rpc", "json", "mqtt", "_INBOX.abc", 1, True, b"\x00\x01\xff"
+        )
+        assert got == ALL_FIELDS_GOLDEN, name
+    for name, decode in DECODERS.items():
+        msg = decode(ALL_FIELDS_GOLDEN)
+        assert msg["reply"] == "_INBOX.abc", name
+        assert msg["QOS"] == 1, name
+        assert msg["retain"] is True, name
+        assert msg["payload"] == b"\x00\x01\xff", name
 
 
 def test_multibyte_varint_length_golden():
-    got = encode_cdcmsg("p", "", "", "", "", 0, False, LONG_PAYLOAD)
-    assert got == LONG_GOLDEN
-    assert decode_cdcmsg(LONG_GOLDEN)["payload"] == LONG_PAYLOAD
+    for name, encode in ENCODERS.items():
+        assert encode("p", "", "", "", "", 0, False, LONG_PAYLOAD) == LONG_GOLDEN, name
+    for name, decode in DECODERS.items():
+        assert decode(LONG_GOLDEN)["payload"] == LONG_PAYLOAD, name
 
 
 def test_decoder_tolerates_unknown_field():
     # protobufjs skips unknown fields; a schema-evolved peer adding field 9
     # must not break the engine's decoder.
     evolved = PUB_JS_GOLDEN + _ld(9, b"extra")
-    msg = decode_cdcmsg(evolved)
-    assert msg["publisher"] == "nms"
-    assert msg["payload"] == b'{"test":123}'
+    for name, decode in DECODERS.items():
+        msg = decode(evolved)
+        assert msg["publisher"] == "nms", name
+        assert msg["payload"] == b'{"test":123}', name

@@ -148,9 +148,22 @@ def broker():
     b.close()
 
 
+def _wait_for_sub(broker):
+    """Wait until the broker has registered a SUB: a PUB routed before that
+    is dropped, and the subscriber's next_msg would wait for it forever."""
+    deadline = time.time() + 5
+    while time.time() < deadline:
+        with broker.lock:
+            if broker.subs:
+                return
+        time.sleep(0.01)
+    pytest.fail("broker never registered the subscription")
+
+
 def test_tcp_pub_sub_roundtrip(broker):
     sub = NatsClient(f"nats://127.0.0.1:{broker.port}")
     sub.subscribe("cdc.client", sid=7)
+    _wait_for_sub(broker)
     pub = NatsClient(f"nats://127.0.0.1:{broker.port}")
     wire = encode_cdcmsg("nms", "sensor/1/temp", "json", "http", "", 1, True, b'{"v":42}')
     pub.publish("cdc.client", wire)
@@ -491,7 +504,7 @@ def test_partitioned_offsets_are_per_partition():
     import os
     import zlib
 
-    from node_cdc_nats_spark.sources.nats import _make_datasource_cls, spool_publish
+    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource, spool_publish
     import tempfile
 
     spool = tempfile.mkdtemp(prefix="spool_unit_")
@@ -499,7 +512,7 @@ def test_partitioned_offsets_are_per_partition():
         spool_publish(spool, i, encode_cdcmsg("p", f"c/{i}", "", "", "", 0, False, b"x"))
         for i in range(12)
     ]
-    ds = _make_datasource_cls()(options={"spool": spool, "partitions": "4"})
+    ds = NatsCdcDataSource(options={"spool": spool, "partitions": "4"})
     reader = ds.streamReader(None)
     start = reader.initialOffset()
     end = reader.latestOffset()
@@ -535,13 +548,13 @@ def test_out_of_order_rename_is_not_lost():
     import zlib
 
     from node_cdc_nats_spark.sources.nats import (
-        _make_datasource_cls,
+        NatsCdcDataSource,
         frame_messages,
     )
     import tempfile
 
     spool = tempfile.mkdtemp(prefix="spool_race_")
-    ds = _make_datasource_cls()(options={"spool": spool, "partitions": "1"})
+    ds = NatsCdcDataSource(options={"spool": spool, "partitions": "1"})
     reader = ds.streamReader(None)
     start = reader.initialOffset()
 
@@ -590,7 +603,7 @@ def test_simple_reader_out_of_order_rename_is_not_lost(tmp_path):
     """Same race through the driver-side SimpleDataSourceStreamReader:
     the r9 ``f >= seg`` filter lost a lower-named late rename."""
     from node_cdc_nats_spark.sources.nats import (
-        _make_datasource_cls,
+        NatsCdcDataSource,
         frame_messages,
     )
 
@@ -604,7 +617,7 @@ def test_simple_reader_out_of_order_rename_is_not_lost(tmp_path):
 
     (spool / ".000000000001-a.seg.tmp").write_bytes(seg_bytes([b"late"]))
     (spool / "000000000002-b.seg").write_bytes(seg_bytes([b"early"]))
-    ds = _make_datasource_cls()(options={"spool": str(spool)})
+    ds = NatsCdcDataSource(options={"spool": str(spool)})
     reader = ds.simpleStreamReader(None)
     rows1, off1 = reader.read(reader.initialOffset())
     assert [bytes(r[7]) for r in rows1] == [b"early"]
@@ -617,6 +630,32 @@ def test_simple_reader_out_of_order_rename_is_not_lost(tmp_path):
     assert [bytes(r[7]) for r in rows2] == [b"late"]
     assert off2["seg"] == "000000000002-b.seg"
     assert off2["drained"] == []
+    rows3, _ = reader.read(off2)
+    assert list(rows3) == []
+
+
+def test_simple_reader_cursor_lands_on_torn_frame(tmp_path):
+    """A torn tail (a writer that bypassed the rename protocol) stops the
+    driver-side drain: the offset parks exactly at the torn frame's start,
+    later segments wait, and once the frame is whole the next read resumes
+    there, so nothing is lost or read twice."""
+    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource, frame_messages
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    envs = [encode_cdcmsg("p", "c", "", "", "", 0, False, f"m{i}".encode()) for i in range(5)]
+    whole = frame_messages(envs[:4])
+    torn_at = len(frame_messages(envs[:3]))
+    (spool / "000000000001-a.seg").write_bytes(whole[: torn_at + 6])
+    (spool / "000000000002-b.seg").write_bytes(frame_messages(envs[4:]))
+    reader = NatsCdcDataSource(options={"spool": str(spool)}).simpleStreamReader(None)
+    rows1, off1 = reader.read(reader.initialOffset())
+    assert [bytes(r[7]) for r in rows1] == [b"m0", b"m1", b"m2"]
+    assert off1 == {"seg": "000000000001-a.seg", "pos": torn_at, "drained": []}
+    (spool / "000000000001-a.seg").write_bytes(whole)
+    rows2, off2 = reader.read(off1)
+    assert [bytes(r[7]) for r in rows2] == [b"m3", b"m4"]
+    assert off2["seg"] == "000000000002-b.seg"
     rows3, _ = reader.read(off2)
     assert list(rows3) == []
 
@@ -694,15 +733,10 @@ def test_simple_reader_drains_multi_frame_segment(spark, tmp_path):
     assert drain() == sorted(f"m{i}" for i in range(9))
 
 
-def test_sink_varint_gate_matches_scalar_encoder(tmp_path, monkeypatch):
-    """The sink omits a varint field exactly when ``encode_cdcmsg`` does:
-    the gate is the converted integer, so a value that is truthy but whose
-    int() is 0 (a fractional QOS column) writes no field. Drives the
-    writer's ``write`` directly with a stub task context."""
-    import pyarrow as pa
+@pytest.fixture()
+def stub_task(monkeypatch):
+    """A task context for driving a writer's ``write`` outside Spark."""
     import pyspark
-
-    from node_cdc_nats_spark.sources.nats import _make_datasource_cls, read_frames
 
     class Task:
         @staticmethod
@@ -710,13 +744,24 @@ def test_sink_varint_gate_matches_scalar_encoder(tmp_path, monkeypatch):
             return 7
 
     monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Task))
+
+
+def test_sink_varint_gate_matches_scalar_encoder(tmp_path, stub_task):
+    """The sink omits a varint field exactly when ``encode_cdcmsg`` does:
+    the gate is the converted integer, so a value that is truthy but whose
+    int() is 0 (a fractional QOS column) writes no field. Drives the
+    writer's ``write`` directly with a stub task context."""
+    import pyarrow as pa
+
+    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource, read_frames
+
     rows = [("a/1", 0.5, False, b"x"), ("a/2", 2.0, True, b"y"), ("a/3", None, None, b"z")]
     batch = pa.RecordBatch.from_arrays(
         [pa.array(col) for col in zip(*rows)],
         names=["channel", "QOS", "retain", "payload"],
     )
     spool = tmp_path / "spool"
-    writer = _make_datasource_cls()({"spool": str(spool)}).streamWriter(None, False)
+    writer = NatsCdcDataSource({"spool": str(spool)}).streamWriter(None, False)
     writer.write(iter([batch]))
     (seg,) = spool.iterdir()
     got = [env for _, env in read_frames(str(seg))]
@@ -724,3 +769,66 @@ def test_sink_varint_gate_matches_scalar_encoder(tmp_path, monkeypatch):
         encode_cdcmsg("", ch, "", "", "", qos or 0, retain or False, pay)
         for ch, qos, retain, pay in rows
     ]
+
+
+# -- TCP sink ------------------------------------------------------------------
+SINK_ROWS = [
+    ("nms", "sensor/1/temp", "json", "http", "", 1, True, b'{"v":42}'),
+    ("nms", "sensor/2/ümlaut", "json", "mqtt", "_INBOX.x", 0, False, bytes(range(200))),
+    ("nms", "sensor/3", "json", "http", "", 2, False, b""),
+]
+
+
+def _sink_batch():
+    import pyarrow as pa
+
+    from node_cdc_nats_spark.functions.cdcmsg import FIELDS
+
+    return pa.RecordBatch.from_arrays([pa.array(col) for col in zip(*SINK_ROWS)], names=list(FIELDS))
+
+
+def test_tcp_sink_frames_match_scalar_encoder(broker, stub_task):
+    """The sink's TCP path publishes each row's envelope on the transport
+    topic, byte-identical to ``encode_cdcmsg``."""
+    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource
+
+    url = f"nats://127.0.0.1:{broker.port}"
+    sub = NatsClient(url, reconnect=False)
+    sub.subscribe("cdc.client", sid=1)
+    _wait_for_sub(broker)
+    NatsCdcDataSource({"url": url}).streamWriter(None, False).write(iter([_sink_batch()]))
+    got = [sub.next_msg() for _ in SINK_ROWS]
+    assert got == [("cdc.client", encode_cdcmsg(*row)) for row in SINK_ROWS]
+    sub.close()
+
+
+def test_tcp_sink_fails_when_broker_closes_before_info(stub_task):
+    """A broker that accepts and closes without its INFO greeting fails the
+    write with NatsError instead of spinning on empty reads."""
+    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource
+
+    server = socket.create_server(("127.0.0.1", 0))
+
+    def accept_and_close():
+        conn, _ = server.accept()
+        conn.close()
+
+    threading.Thread(target=accept_and_close, daemon=True).start()
+    writer = NatsCdcDataSource(
+        {"url": f"nats://127.0.0.1:{server.getsockname()[1]}"}
+    ).streamWriter(None, False)
+    outcome = {}
+
+    def write():
+        try:
+            writer.write(iter([_sink_batch()]))
+        except Exception as exc:  # recorded for the assertions below
+            outcome["exc"] = exc
+
+    t = threading.Thread(target=write, daemon=True)
+    t.start()
+    t.join(timeout=15)
+    server.close()
+    assert not t.is_alive(), "write() hung on a broker that closed before INFO"
+    assert isinstance(outcome.get("exc"), NatsError), outcome
+    assert outcome["exc"].code == CONN_CLOSED
