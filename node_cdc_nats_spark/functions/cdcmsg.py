@@ -265,6 +265,12 @@ def encode_col(struct: Column) -> Column:
     def _encode(pdf):
         import pandas as pd
 
-        return pd.Series(encode_columns({f: pdf[f].tolist() for f in FIELDS}, len(pdf)), dtype=object)
+        cols = {}
+        for f in FIELDS:
+            s = pdf[f]
+            # pandas turns a nullable int column holding a NULL into float64
+            # NaN; as None the field is omitted, as encode_cdcmsg omits it.
+            cols[f] = (s.astype(object).where(s.notna(), None) if s.hasnans else s).tolist()
+        return pd.Series(encode_columns(cols, len(pdf)), dtype=object)
 
     return _encode(struct)

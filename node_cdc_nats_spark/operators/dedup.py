@@ -22,11 +22,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from ..io import load_table
 from ..cache import managed_persist
 from ..registry import register
+from .graph import _cc_labels, _directed
 from .text import NORM_DUCK_SQL as _SQL_NORM_DUCK, NORM_SPARK_SQL
 
 SHINGLE_N = 3
@@ -816,20 +817,19 @@ def simhash_fingerprints(d: DataFrame) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS from the MinHash near-dup pair graph: connected
-    components by iterative min-label propagation, then canonical-doc
-    election (keep the smallest doc_id per component) — the step an actual
-    dedup pipeline runs after pair generation, since near-dup is not
-    transitive but removal decisions must be.
+    components, then canonical-doc election (keep the smallest doc_id per
+    component) — the step an actual dedup pipeline runs after pair
+    generation, since near-dup is not transitive but removal decisions
+    must be.
 
-    Distributed pattern: the classic large-graph CC loop — each iteration
-    is one join + one min-aggregation, both shuffling on the node key only
-    (never materializing the transitive closure), converging in
-    O(component diameter) rounds; near-dup components are shallow (text
-    clusters, not chains), so rounds stay single-digit at any corpus
-    size. The driver-side loop holds one integer (the converged flag) per
-    round — same bounded-iteration shape as ann_ivf_topk's k-means. The
-    DuckDB oracle computes the same fixpoint via recursive transitive
-    closure (affordable at oracle scale only).
+    Distributed pattern: the pair graph runs through
+    graph_connected_components' pointer-jumping core
+    (:func:`~.graph._cc_labels`): joins shuffling on the node key only,
+    never materializing the transitive closure, converging in
+    O(log component diameter) rounds under the same loud round budget.
+    Documents with no near-dup pair are left-joined back as their own
+    singleton clusters. The DuckDB oracle computes the same fixpoint via
+    recursive transitive closure (affordable at oracle scale only).
 
     The verified pair set is localCheckpointed once per (session, sf) and
     shared with any other consumer in the process — pair generation is
@@ -845,66 +845,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         _PAIR_CACHE[key] = pairs
-    edges = (
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .union(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("t")))
-        .persist()
+    labels, _ = _cc_labels(_directed(pairs.toDF("u", "v")), "dedup_clusters")
+    cid = F.coalesce("lab", "doc_id")
+    return (
+        load_table(spark, sf_dir, "documents")
+        .join(labels, F.col("doc_id") == F.col("node"), "left")
+        .select(
+            "doc_id",
+            cid.alias("cluster_id"),
+            F.count(F.lit(1)).over(W.partitionBy(cid)).alias("cluster_size"),
+            (F.col("doc_id") == cid).alias("is_canonical"),
+        )
     )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = docs.select(
-        "doc_id", F.col("doc_id").alias("lbl"), F.lit(False).alias("chg")
-    ).localCheckpoint(eager=True)
-    # Fail LOUDLY if the fixpoint is not reached: a silent cap would emit a
-    # split cluster (several cluster_ids, several canonicals) for any
-    # component whose diameter exceeds the round count.
-    max_rounds, converged = 50, False
-    for _ in range(max_rounds):
-        nbr = (
-            edges.join(labels, edges.s == labels.doc_id)
-            .groupBy(F.col("t").alias("doc_id"))
-            .agg(F.min("lbl").alias("nbr_min"))
-        )
-        # localCheckpoint (not persist): materializes once, breaks lineage,
-        # and leaves nothing in executor storage memory across iterations.
-        # The changed-label count rides the checkpoint job as an observed
-        # metric (r14, the graph-loop fusion): one driver-synchronized job
-        # per round instead of checkpoint + count.
-        obs = Observation()
-        nxt = (
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("lbl"), F.coalesce("nbr_min", F.col("lbl"))).alias("lbl"),
-                (F.coalesce("nbr_min", F.col("lbl")) < F.col("lbl")).alias("chg"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.col("chg").cast("long")), F.lit(0)
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"]
-        labels = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters: label propagation did not converge in "
-            f"{max_rounds} rounds (component diameter > {max_rounds})"
-        )
-    w = W.partitionBy("lbl")
-    out = labels.select(
-        "doc_id",
-        F.col("lbl").alias("cluster_id"),
-        F.count(F.lit(1)).over(w).alias("cluster_size"),
-        (F.col("doc_id") == F.col("lbl")).alias("is_canonical"),
-    )
-    result = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return result
 
 
 SPAN_TOKENS = 10

@@ -17,6 +17,7 @@ again the direct projection: transport + codec must be lossless.
 from __future__ import annotations
 
 import itertools
+import shutil
 import tempfile
 import time
 
@@ -122,14 +123,16 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = f"nats_rt_{next(_RT_SEQ)}"
+    sub_ckpt = _ckpt_dir()
     sub_q = (
         sub.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", _ckpt_dir())
+        .option("checkpointLocation", sub_ckpt)
         .trigger(processingTime="50 milliseconds")
         .start()
     )
+    pub = None
     try:
         pub = (
             env_stream.writeStream.format("nats_cdc")
@@ -170,6 +173,12 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 time.sleep(0.02)  # idle subscriber: poll, do not spin
     finally:
         sub_q.stop()
+        if pub is not None:
+            pub.stop()
+        # The result reads the memory sink, so the spool and both
+        # checkpoints are dead once the queries have stopped.
+        for d in (spool, ckpt, sub_ckpt):
+            shutil.rmtree(d, ignore_errors=True)
     return spark.table(name).withColumn(
         "payload", F.col("payload").cast("string")
     )

@@ -20,7 +20,7 @@ of supersteps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..cache import managed_persist
 from ..io import load_table
@@ -77,6 +77,37 @@ def _copurchase_und(li: DataFrame) -> DataFrame:
         .filter(F.col("u") < F.col("v"))
         .distinct()
     )
+
+
+def _directed(und: DataFrame) -> DataFrame:
+    """The symmetric (src, dst) edge list of the u < v edges ``und``,
+    persisted because every superstep joins it."""
+    return managed_persist(
+        und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+            und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        )
+    )
+
+
+def _checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint(eager=True)`` plus the aggregate ``metrics``
+    over its rows, keyed by name. The metrics ride the checkpoint job as
+    one ``Observation`` (CollectMetrics accumulates task-side during the
+    materialization), so a round's counter costs no separate count()."""
+    obs = Observation()
+    out = df.observe(obs, *(c.alias(k) for k, c in metrics.items()))
+    return out.localCheckpoint(eager=True), obs.get
+
+
+def _fixpoint(step, state, max_rounds: int, failure: str):
+    """Run ``state, done = step(state)`` until ``done`` and return the last
+    state; raise ``RuntimeError(failure)`` after ``max_rounds`` rounds
+    without it — a silent cap would return an unconverged result."""
+    for _ in range(max_rounds):
+        state, done = step(state)
+        if done:
+            return state
+    raise RuntimeError(failure)
 
 
 def _sql_pr_step(i: int) -> str:
@@ -498,6 +529,35 @@ def _sql_lpa_step(i: int) -> str:
              FROM c{i} GROUP BY node)"""
 
 
+def _lpa_labels(ed: DataFrame) -> DataFrame:
+    """The (node, lab) vector after ``LPA_ITERS`` synchronous supersteps
+    over the symmetric edge list ``ed`` (see graph_label_propagation)."""
+    # Superstep 1 in closed form (mirrored in the oracle): initial labels
+    # are all-distinct node ids, so the mode degenerates to MIN(neighbor)
+    # — one map-side-reducible aggregate instead of a join + an exchange
+    # that (labels still being unique) could not partial-reduce at all.
+    # It also covers every node (the edge set is symmetric).
+    # Each step's label vector is persisted (|V| rows — tiny): without
+    # it, every later step's BROADCAST BUILD re-executes all prior steps
+    # as nested jobs (measured ~2 extra |E| passes at 3 supersteps).
+    labels = managed_persist(
+        ed.groupBy("dst").agg(F.min("src").alias("lab")).select(
+            F.col("dst").alias("node"), "lab"
+        )
+    )
+    for _ in range(1, LPA_ITERS):
+        contrib = ed.join(labels, ed["src"] == labels["node"]).select("dst", "lab")
+        # mode(deterministic=True) breaks frequency ties on the LOWEST
+        # value — exactly the oracle's arg-max over [cnt, -lab]; its
+        # partial buffers combine map-side once labels reach consensus.
+        labels = managed_persist(
+            contrib.groupBy("dst").agg(
+                F.mode("lab", True).alias("lab")
+            ).select(F.col("dst").alias("node"), "lab")
+        )
+    return labels
+
+
 @register(
     "graph_label_propagation",
     oracle=f"""
@@ -542,38 +602,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is the knob; each step stays |edges|-linear.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # und feeds both union branches; ed feeds every superstep's join.
-    und = managed_persist(_copurchase_und(li))
-    ed = managed_persist(
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-    )
-    # Superstep 1 in closed form (mirrored in the oracle): initial labels
-    # are all-distinct node ids, so the mode degenerates to MIN(neighbor)
-    # — one map-side-reducible aggregate instead of a join + an exchange
-    # that (labels still being unique) could not partial-reduce at all.
-    # This also covers every node (the edge set is symmetric) and
-    # replaces the separate distinct-nodes init pass.
-    # Each step's label vector is persisted (|V| rows — tiny): without
-    # it, every later step's BROADCAST BUILD re-executes all prior steps
-    # as nested jobs (measured ~2 extra |E| passes at 3 supersteps).
-    labels = managed_persist(
-        ed.groupBy("dst").agg(F.min("src").alias("lab")).select(
-            F.col("dst").alias("node"), "lab"
-        )
-    )
-    for _ in range(1, LPA_ITERS):
-        contrib = ed.join(labels, ed["src"] == labels["node"]).select("dst", "lab")
-        # mode(deterministic=True) breaks frequency ties on the LOWEST
-        # value — exactly the oracle's arg-max over [cnt, -lab]; its
-        # partial buffers combine map-side, and by step 2 label consensus
-        # makes that reduction real.
-        labels = managed_persist(
-            contrib.groupBy("dst").agg(
-                F.mode("lab", True).alias("lab")
-            ).select(F.col("dst").alias("node"), "lab")
-        )
+    labels = _lpa_labels(_directed(managed_persist(_copurchase_und(li))))
     return (
         labels.groupBy("lab")
         .agg(F.count(F.lit(1)).alias("members"))
@@ -594,8 +623,19 @@ CC_MAX_ITERS = 12
 # Broadcast the per-round label vector while it fits executor memory
 # comfortably: 4M (node, lab) BIGINT pairs ≈ 64 MB per copy. Beyond it the
 # rounds fall back to shuffled joins — the same size-based call AQE would
-# make if localCheckpoint kept stats (it does not; see the loop comment).
+# make if localCheckpoint kept stats (it does not; see _cc_labels).
 CC_BROADCAST_MAX_NODES = 4_000_000
+
+
+def _broadcast_if(df: DataFrame, rows: int) -> DataFrame:
+    """Broadcast-hint ``df`` when the driver knows it holds at most
+    ``CC_BROADCAST_MAX_NODES`` rows. A localCheckpoint erases the size
+    stats AQE would use, so without the hint every round sort-merges,
+    shuffling AND sorting the |E| edge side (measured interleaved
+    min-of-3 at sf0.1: 7.21 → 6.71 s cold with it); beyond the cap the
+    joins stay shuffled, because a forced Θ(|V|)-row broadcast would OOM
+    at the 1e9-node target."""
+    return F.broadcast(df) if rows <= CC_BROADCAST_MAX_NODES else df
 
 
 def _sql_cc_step(i: int) -> str:
@@ -613,6 +653,59 @@ def _sql_cc_step(i: int) -> str:
              FROM e JOIN l{i - 1} p ON p.node = e.src GROUP BY e.dst),
     l{i} AS MATERIALIZED (SELECT p.node, LEAST(p.lab, p.plab, n.nlab) AS lab
              FROM p{i} p JOIN n{i} n ON n.node = p.node)"""
+
+
+def _cc_labels(ed: DataFrame, name: str) -> tuple[DataFrame, int]:
+    """Connected components of the symmetric edge list ``ed`` (src, dst):
+    the checkpointed (node, lab) vector, lab = the component's smallest
+    node id, for every node that has an edge, plus the node count. The
+    pointer-jumping core of graph_connected_components and dedup_clusters;
+    past ``CC_MAX_ITERS`` rounds it raises, naming ``name``."""
+    # Superstep 1 in closed form (mirrored in the oracle's l1): with
+    # all-distinct initial labels the fold is least(self, min neighbor) —
+    # one map-side-reducible aggregate, no init pass; symmetric edges
+    # mean every graph node appears as dst. |V| rides the same job.
+    labels, got = _checkpoint(
+        ed.groupBy("dst")
+        .agg(F.min("src").alias("m"))
+        .select(F.col("dst").alias("node"), F.least("dst", "m").alias("lab")),
+        n=F.count(F.lit(1)),
+    )
+    n_nodes = got["n"]
+
+    def step(labels):
+        lab2 = _broadcast_if(
+            labels.select(F.col("node").alias("lnode"), F.col("lab").alias("plab")),
+            n_nodes,
+        )
+        ptr = labels.join(lab2, labels["lab"] == lab2["lnode"]).select(
+            "node", "lab", "plab"
+        )
+        labj = _broadcast_if(labels, n_nodes)
+        nmin = (
+            ed.join(labj, ed["src"] == labj["node"])
+            .groupBy("dst")
+            .agg(F.min("lab").alias("nlab"))
+            .withColumnRenamed("dst", "node")
+        )
+        new = F.least("lab", "plab", "nlab")
+        # chg is never NULL (all three candidates come from inner joins);
+        # an empty vector sums to NULL, hence the coalesce.
+        nxt, got = _checkpoint(
+            ptr.join(nmin, "node").select(
+                "node", new.alias("lab"), (new < F.col("lab")).alias("chg")
+            ),
+            changed=F.coalesce(F.sum(F.col("chg").cast("long")), F.lit(0)),
+        )
+        return nxt.drop("chg"), got["changed"] == 0
+
+    labels = _fixpoint(
+        step, labels, CC_MAX_ITERS - 1,
+        f"{name}: pointer-jumping propagation did not converge in "
+        f"{CC_MAX_ITERS} rounds (component diameter beyond "
+        f"~2^{CC_MAX_ITERS - 2})",
+    )
+    return labels, n_nodes
 
 
 @register(
@@ -639,154 +732,51 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the part co-purchase graph — every node
     labeled with its component's smallest part id plus the component size:
     the substitute/compatibility clusters downstream assortment and
-    recommendation pipelines key on (and the canonical large-graph CC the
-    graph family was missing; ``dedup_clusters`` runs the same fixpoint
-    but only over the near-dup pair graph).
+    recommendation pipelines key on. ``dedup_clusters`` runs the same
+    core (:func:`_cc_labels`) over the near-dup pair graph.
 
     Scale plan — min-label propagation with POINTER JUMPING, the
     Shiloach-Vishkin halving step expressed as DataFrame joins: each
     superstep folds three integer signals per node — its label, its
     label's label (one |V|-sized self-join on the label vector; every
     label is a node id, so the join always hits), and its neighbors' min
-    label (one |E|-sized equi-join; AQE broadcasts the |V|-sized label
-    vector). Pointer chasing doubles the propagation horizon per round,
-    so fixpoint arrives in O(log diameter) supersteps — {CC_MAX_ITERS}
-    rounds cover diameters to ~1000 where plain propagation
-    (``dedup_clusters``' loop, fine for shallow near-dup cliques) would
+    label (one |E|-sized equi-join with the broadcast label vector).
+    Pointer chasing doubles the propagation horizon per round, so
+    fixpoint arrives in O(log diameter) supersteps — {CC_MAX_ITERS}
+    rounds cover diameters to ~1000 where plain per-hop propagation would
     need a round per hop. Labels only decrease and are BIGINTs end to
     end, so determinism is free and the driver hash-checks exact values.
-    Each round's |V|-sized vector is localCheckpoint-ed (breaks lineage;
-    the LPA lesson: without it every later round's broadcast build
-    re-executes all prior rounds), convergence is a per-round count of
-    changed labels that rides the checkpoint job as an ``observe``
-    CollectMetrics side product (r14: ONE driver-synchronized job per
-    round, down from checkpoint + count — interleaved min-of-3 at sf0.1:
-    4.47 → 4.04 s), and the loop FAILS LOUDLY past the budget — a silent
-    cap would emit split components. REJECTED rewrites, both measured at
-    sf0.1 (A/B in one session, bench-style 3 runs): (a) managed_persist
-    label vectors (LPA's pattern — CacheManager-reusable) read 38.6 s
-    cold / 7.2 s warm vs localCheckpoint's 7.8 / 4.5 — with 3 joins per
-    round the un-broken lineage makes every round re-optimize and
-    re-build the whole history (LPA survives persist because it runs 2
-    simpler steps); (b) a BLANKET broadcast hint — a first single-shot
-    read suggested no change, but a careful interleaved min-of-3 A/B
-    measured 7.21 → 6.71 s cold, so the hint SHIPPED as the size-gated
-    ``CC_BROADCAST_MAX_NODES`` dial instead (the checkpoint erases the
-    stats AQE would have used; the driver substitutes its exact |V|).
-    The remaining per-round cost is the |E|-sized neighbor-min aggregate
-    plus the checkpoint job's fixed machinery. Component sizes come from a
-    groupBy + join rather than a window: a giant component (the
-    expected shape — sf0.1 is ONE 20k-node component) would funnel the
-    whole output through a single window partition, while the groupBy
-    reduces map-side. The sizes join side goes through the SAME
+    Each round's |V|-sized vector is localCheckpoint-ed (breaks lineage:
+    without it every later round's broadcast build re-executes all prior
+    rounds), and the round's changed-label count rides the checkpoint job
+    as an observed metric, so a round is ONE driver-synchronized job
+    (interleaved min-of-3 at sf0.1: 4.47 s with a separate count job,
+    4.04 s fused). The loop FAILS LOUDLY past the budget — a silent cap
+    would emit split components. managed_persist label vectors (LPA's
+    pattern) measured 38.6 s cold / 7.2 s warm against localCheckpoint's
+    7.8 / 4.5 at sf0.1: with 3 joins per round the un-broken lineage makes
+    every round re-optimize and re-build the whole history (LPA survives
+    persist because it runs 2 simpler steps). Component sizes come from a
+    groupBy + join rather than a window: a giant component (the expected
+    shape — sf0.1 is ONE 20k-node component) would funnel the whole
+    output through a single window partition, while the groupBy reduces
+    map-side. The sizes join side goes through the SAME
     ``CC_BROADCAST_MAX_NODES`` dial as the label vector — sizes is one
-    row per component, which is Θ(|V|) worst case (up to |V|/2 pair
-    components on a sparse near-dup-shaped graph), so an unconditional
-    broadcast there would OOM at the 1e9-node target exactly like a
-    forced label broadcast would. The oracle unrolls the SAME step {CC_MAX_ITERS}
+    row per component, Θ(|V|) worst case, so an unconditional broadcast
+    there would OOM at the 1e9-node target exactly like a forced label
+    broadcast would. The oracle unrolls the SAME step {CC_MAX_ITERS}
     times; supersteps past Spark's early stop are idempotent, so both
-    engines agree bit-for-bit whenever the guard passes. (The oracle's
-    step CTEs are MATERIALIZED — DuckDB inlines plain CTEs, and three
-    references per step would expand 3^11 copies of the scan.)
+    engines agree bit-for-bit whenever the guard passes.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    und = managed_persist(_copurchase_und(li))
-    ed = managed_persist(
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
+    labels, n_nodes = _cc_labels(
+        _directed(managed_persist(_copurchase_und(li))),
+        "graph_connected_components",
     )
-    # Superstep 1 in closed form (mirrored in the oracle's l1): with
-    # all-distinct initial labels the fold is least(self, min neighbor) —
-    # one map-side-reducible aggregate, no init pass; symmetric edges
-    # mean every graph node appears as dst.
-    # |V| rides the init-checkpoint job as an observed metric (r14: the
-    # CollectMetrics accumulator fills during the materialization, so the
-    # separate count() job is gone — same fusion as the per-round changed
-    # probe below and graph_k_core's edge counter).
-    obs0 = Observation()
-    labels = (
-        ed.groupBy("dst")
-        .agg(F.min("src").alias("m"))
-        .select(
-            F.col("dst").alias("node"),
-            F.least(F.col("dst"), F.col("m")).alias("lab"),
-        )
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    # A localCheckpoint erases size stats, so AQE would sort-merge every
-    # round's joins — shuffling AND sorting the |E| edge side per round
-    # (plan-verified: 3 SMJs, 2 extra |E| exchanges). The driver KNOWS |V|
-    # exactly (the observed count — exactly the statistic AQE is missing),
-    # so it makes AQE's call itself: broadcast the label vector while it
-    # fits an executor (measured interleaved min-of-3 at sf0.1: 7.21 →
-    # 6.71 s cold), fall back to the shuffled joins beyond the cap — at
-    # 1e9 nodes a forced broadcast would OOM, which is why this is a
-    # measured dial and not a blanket hint.
-    n_nodes = obs0.get["n"]
-
-    def side(df):
-        # Gates EVERY build side derived from the label vector — the
-        # per-round self-join/neighbor-min sides AND the final
-        # component-sizes table, which is one row per component and hence
-        # Θ(|V|) worst case (a pair-components graph has |V|/2 rows); an
-        # ungated hint there would reintroduce the exact OOM this dial
-        # exists to prevent. Component count ≤ n_nodes always, so the one
-        # measured threshold is safe for all of them.
-        return F.broadcast(df) if n_nodes <= CC_BROADCAST_MAX_NODES else df
-
-    converged = False
-    for _ in range(2, CC_MAX_ITERS + 1):
-        lab2 = side(
-            labels.select(F.col("node").alias("lnode"), F.col("lab").alias("plab"))
-        )
-        ptr = labels.join(lab2, labels["lab"] == lab2["lnode"]).select(
-            "node", "lab", "plab"
-        )
-        labj = side(labels)
-        nmin = (
-            ed.join(labj, ed["src"] == labj["node"])
-            .groupBy("dst")
-            .agg(F.min("lab").alias("nlab"))
-            .withColumnRenamed("dst", "node")
-        )
-        # The changed-label count rides the checkpoint job as an observed
-        # metric (r14 round fusion): ONE driver-synchronized job per round
-        # instead of checkpoint + count. chg is never NULL (all three
-        # candidates come from inner joins), and the empty-vector edge
-        # case coalesces to 0.
-        obs = Observation()
-        nxt = (
-            ptr.join(nmin, "node")
-            .select(
-                "node",
-                F.least("lab", "plab", "nlab").alias("new_lab"),
-                (F.least("lab", "plab", "nlab") < F.col("lab")).alias("chg"),
-            )
-            .withColumnRenamed("new_lab", "lab")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.col("chg").cast("long")), F.lit(0)
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"]
-        labels = nxt.drop("chg")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"graph_connected_components: pointer-jumping propagation did "
-            f"not converge in {CC_MAX_ITERS} rounds (component diameter "
-            f"beyond ~2^{CC_MAX_ITERS - 2})"
-        )
+    # One row per component ≤ n_nodes rows, so the same gate applies.
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("csize"))
     return (
-        labels.join(side(sizes), "lab")
+        labels.join(_broadcast_if(sizes, n_nodes), "lab")
         .select("node", F.col("lab").alias("component"), "csize")
     )
 
@@ -842,110 +832,71 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     away (max degree 138 but the cascade undercuts K) — the empty-core
     path both engines agree on.
 
-    Scale plan — ONE driver-synchronized job per peel round (r14 round
-    fusion; r13 paid four): the symmetric-degree census (map-side partial
-    on the edge list) rides INSIDE the edge-filter job as the shared
-    broadcast build of the TWO semi-joins restricting the edge set to
-    kept endpoints (both joins reference the same census DataFrame, so
-    the exchange-reuse rule builds it once — runtime plan evidence in
+    Scale plan — ONE driver-synchronized job per peel round: the
+    symmetric-degree census (map-side partial on the edge list) rides
+    INSIDE the edge-filter job as the shared broadcast build of the TWO
+    semi-joins restricting the edge set to kept endpoints (both joins
+    reference the same census DataFrame, so the exchange-reuse rule
+    builds it once — runtime plan evidence in
     plans/r14/graph_k_core_round_after.txt), and the surviving edge
-    count rides the same job as an ``observe`` CollectMetrics side
-    product. Convergence fires on that edge count: keep sets and edge
-    sets both nest (each round filters the previous), and an unchanged
-    keep set makes the re-filter a no-op, so edge-count convergence
-    fires at the SAME round index a keep-count probe would. The census
-    broadcast goes through the same measured ``CC_BROADCAST_MAX_NODES``
-    dial as graph_connected_components, gated WITHOUT a keep count:
-    every kept node has degree ≥ K over the current edge set, so
-    |keep| ≤ 2·|E|/K with |E| known exactly — beyond the cap the rounds
-    fall back to shuffled semi-joins, where a forced |V|-row broadcast
-    would OOM at the 1e9-node target. The surviving edge set is
-    localCheckpoint-ed per round (the CC lesson: un-broken lineage
-    re-optimizes and re-executes the whole history; LPA-style persist
-    measured 5× worse on the same shape; the r13-rejected lazy rebuild
-    from composed semi-joins measured 2× worse). The symmetric census
-    explodes both endpoints in ONE pass over the checkpointed edges
-    (r13: the union-of-two-selects shape scanned it twice per round).
-    The loop FAILS LOUDLY past the {KCORE_MAX_ITERS}-round budget (2×
-    the measured cascade) — a silent cap would emit a fake core
-    containing not-yet-peeled fringe. Integer end-to-end, so the driver
-    hash-checks exact values. The oracle unrolls the SAME step
-    {KCORE_MAX_ITERS} times; steps past Spark's early stop are
-    idempotent, so both engines agree bit-for-bit whenever the guard
-    passes. (r14 interleaved min-of-3 at sf0.1: 5.57 → 4.36 s for the
-    census fusion, then 4.36 → 3.87 with the observed edge count.)
+    count rides the same job as an observed metric. Convergence fires on
+    that edge count: keep sets and edge sets both nest (each round
+    filters the previous), and an unchanged keep set makes the re-filter
+    a no-op, so edge-count convergence fires at the SAME round index a
+    keep-count probe would. The census broadcast goes through the same
+    measured ``CC_BROADCAST_MAX_NODES`` dial as
+    graph_connected_components, gated WITHOUT a keep count: every kept
+    node has degree ≥ K over the current edge set, so |keep| ≤ 2·|E|/K
+    with |E| known exactly — beyond the cap the rounds fall back to
+    shuffled semi-joins. The surviving edge set is localCheckpoint-ed
+    per round (the CC lesson: un-broken lineage re-optimizes and
+    re-executes the whole history; LPA-style persist measured 5× worse
+    on the same shape, and a lazy rebuild from composed semi-joins 2×
+    worse). The symmetric census explodes both endpoints in ONE pass
+    over the checkpointed edges (a union of two selects scanned them
+    twice per round). The loop FAILS LOUDLY past the
+    {KCORE_MAX_ITERS}-round budget (2× the measured cascade) — a silent
+    cap would emit a fake core containing not-yet-peeled fringe. Integer
+    end-to-end, so the driver hash-checks exact values. The oracle
+    unrolls the SAME step {KCORE_MAX_ITERS} times; steps past Spark's
+    early stop are idempotent, so both engines agree bit-for-bit
+    whenever the guard passes. (Interleaved min-of-3 at sf0.1: 5.57 →
+    4.36 s for the census fusion, then 4.36 → 3.87 with the observed
+    edge count.)
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # The edge count rides the checkpoint job itself as an observed
-    # metric (CollectMetrics accumulates task-side during the
-    # materialization — the stream_dedup_incremental trick), so neither
-    # the base build nor any peel round pays a separate count() job.
-    obs0 = Observation()
-    edges = (
-        _copurchase_und(li)
-        .observe(obs0, F.count(F.lit(1)).alias("e"))
-        .localCheckpoint(eager=True)
-    )
-    prev_e = obs0.get["e"]
+    edges, got = _checkpoint(_copurchase_und(li), e=F.count(F.lit(1)))
 
     def sym(e):
         # Both endpoints in one scan: explode is a map-side generator, so
         # the census reads the checkpointed edge partitions once.
         return e.select(F.explode(F.array("u", "v")).alias("node"))
 
-    converged = False
-    for _ in range(1, KCORE_MAX_ITERS + 1):
-        # r14 ROUND FUSION (VERDICT r13 top_next): the degree census is no
-        # longer its own checkpoint+count pair of driver-synchronized jobs
-        # — it rides INSIDE the edge-filter job as the (shared) broadcast
-        # build of the two semi-joins, and convergence fires on the edge
-        # count alone, observed ON the same job. Soundness: keep sets and
-        # edge sets both nest (each round filters the previous), and an
-        # unchanged keep set makes the re-filter a no-op, so edge-count
-        # convergence fires at the SAME round index the old keep-count
-        # probe did — ONE job per round (filter+checkpoint, edge count as
-        # a CollectMetrics side product) instead of 4 (census checkpoint,
-        # keep count, filter checkpoint, edge probe). Both semi-joins
-        # reference the SAME keep DataFrame, so the exchange-reuse rule
-        # builds the census broadcast once per round (plan-verified: one
-        # BroadcastExchange + one ReusedExchange in
-        # plans/r14/graph_k_core_round_after.txt).
-        keep = (
+    def step(state):
+        edges, prev_e = state
+        keep = _broadcast_if(
             sym(edges)
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= KCORE_K)
-            .select("node")
+            .select("node"),
+            2 * prev_e // KCORE_K,
         )
-        # Broadcast gate without a keep count: every kept node has degree
-        # >= K over the current edge set, so |keep| <= 2·|E|/K — and the
-        # driver knows |E| exactly (the convergence counter). Same
-        # measured CC_BROADCAST_MAX_NODES dial, same shuffled fallback
-        # beyond it (a forced Θ(|V|)-row broadcast would OOM at the
-        # 1e9-node target).
-        if 2 * prev_e // KCORE_K <= CC_BROADCAST_MAX_NODES:
-            keep = F.broadcast(keep)
-        obs = Observation()
-        edges = (
+        edges, got = _checkpoint(
             edges.join(keep, edges["u"] == keep["node"], "left_semi")
-            .join(keep, edges["v"] == keep["node"], "left_semi")
-            .observe(obs, F.count(F.lit(1)).alias("e"))
-            .localCheckpoint(eager=True)
+            .join(keep, edges["v"] == keep["node"], "left_semi"),
+            e=F.count(F.lit(1)),
         )
-        cur_e = obs.get["e"]
-        if cur_e == prev_e:
-            # Edge sets nest (each round filters the previous set), so an
-            # unchanged count ⇒ identical edge set ⇒ the next keep census
-            # would equal this round's keep ⇒ fixpoint now.
-            converged = True
-            break
-        prev_e = cur_e
-    if not converged:
-        raise RuntimeError(
-            f"graph_k_core: peeling did not reach a fixpoint in "
-            f"{KCORE_MAX_ITERS} rounds (cascade longer than the budget — "
-            f"a silent cap would emit un-peeled fringe as core)"
-        )
+        # Edge sets nest, so an unchanged count ⇒ identical edge set ⇒
+        # the next census would equal this round's keep ⇒ fixpoint.
+        return (edges, got["e"]), got["e"] == prev_e
+
+    edges, _ = _fixpoint(
+        step, (edges, got["e"]), KCORE_MAX_ITERS,
+        f"graph_k_core: peeling did not reach a fixpoint in "
+        f"{KCORE_MAX_ITERS} rounds (cascade longer than the budget — "
+        f"a silent cap would emit un-peeled fringe as core)",
+    )
     return (
         sym(edges)
         .groupBy("node")
@@ -1000,51 +951,29 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     glued sparse nodes together), closing the graph-quality loop with
     graph_k_core's density pre-filter.
 
-    Scale plan: the label vector is recomputed with the LPA superstep
-    loop VERBATIM (one |E|-sized equi-join + one map-side-combinable
-    deterministic-mode aggregate per step — the loop is deliberately
-    duplicated rather than extracted so graph_label_propagation's code is
-    untouched and its driver green survives; the retention-twin
-    precedent, with the twin-equality pinned by the shared tie-rule
-    contract both oracles derive from the same ``_sql_lpa_step``). On top
-    of it: ONE per-node degree aggregate (map-side partial over the
-    symmetric edge list), ONE |E|-sized double label join for the intra
-    count (AQE broadcasts the |V|-sized label vector exactly as in the
-    LPA steps; beyond broadcast range both joins shuffle on node id —
-    no array, no window, nothing driver-side except the single-scalar
-    edge count m), and per-community aggregates whose key cardinality is
-    the community count ≤ |V|. q_contrib is two IEEE divisions and one
-    multiply with both engines evaluating the IDENTICAL tree (the square
-    is an explicit self-product — ``POWER(x, 2)`` is a libm call whose
-    last bit may differ across engines), so the driver hash-checks the
-    doubles bit-for-bit. At 100 TB the additional cost over LPA itself
-    is one edge-set pass — the score rides the partition it audits.
+    Scale plan: the label vector comes from graph_label_propagation's own
+    superstep loop (:func:`_lpa_labels`; both oracles derive the tie rule
+    from the same ``_sql_lpa_step``). On top of it: ONE per-node degree
+    aggregate (map-side partial over the symmetric edge list), ONE
+    |E|-sized double label join for the intra count (AQE broadcasts the
+    |V|-sized label vector exactly as in the LPA steps; beyond broadcast
+    range both joins shuffle on node id — no array, no window, nothing
+    driver-side except the single-scalar edge count m), and
+    per-community aggregates whose key cardinality is the community
+    count ≤ |V|. q_contrib is two IEEE divisions and one multiply with
+    both engines evaluating the IDENTICAL tree (the square is an explicit
+    self-product — ``POWER(x, 2)`` is a libm call whose last bit may
+    differ across engines), so the driver hash-checks the doubles
+    bit-for-bit. At 100 TB the additional cost over LPA itself is one
+    edge-set pass — the score rides the partition it audits.
     """
     li = load_table(spark, sf_dir, "lineitem")
     und = managed_persist(_copurchase_und(li))
     # The one driver-side scalar: the undirected edge count m (a 1-row
     # aggregate probe, like CC's n_nodes — never a corpus collect).
     m = und.count()
-    ed = managed_persist(
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-    )
-    # --- LPA superstep loop, duplicated VERBATIM from
-    # graph_label_propagation (see Scale plan above for why) ---
-    labels = managed_persist(
-        ed.groupBy("dst").agg(F.min("src").alias("lab")).select(
-            F.col("dst").alias("node"), "lab"
-        )
-    )
-    for _ in range(1, LPA_ITERS):
-        contrib = ed.join(labels, ed["src"] == labels["node"]).select("dst", "lab")
-        labels = managed_persist(
-            contrib.groupBy("dst").agg(
-                F.mode("lab", True).alias("lab")
-            ).select(F.col("dst").alias("node"), "lab")
-        )
-    # --- modularity on top of the fixpoint vector ---
+    ed = _directed(und)
+    labels = _lpa_labels(ed)
     deg = ed.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )

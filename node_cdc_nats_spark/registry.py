@@ -71,9 +71,7 @@ _VERIFY_HEAD = (
     # cells (anchor-bounded in-cell cosine election, keep-first keeper)
     "embed_dedup_semantic",
     # r13: new op — Newman modularity of the LPA partition (per-community
-    # e_c/m − (d_c/2m)² contributions; the LPA superstep loop is
-    # deliberately DUPLICATED there so graph_label_propagation's code and
-    # driver green stay untouched — the retention-twin precedent)
+    # e_c/m − (d_c/2m)² contributions)
     "graph_modularity",
 )
 

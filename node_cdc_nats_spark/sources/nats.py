@@ -226,6 +226,10 @@ class NatsClient:
         sock.sendall(b'CONNECT {"verbose":false,"protocol":0}\r\n')
         for sid, subject in self._subs.items():
             sock.sendall(f"SUB {subject} {sid}\r\n".encode())
+        # The 10 s timeout bounds the dial and handshake only: left on the
+        # socket, a subscriber idle for 10 s would take the silence for a
+        # dropped connection and redial.
+        sock.settimeout(None)
         self._sock = sock
         self._buf = buf
         self._gen += 1

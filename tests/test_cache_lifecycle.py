@@ -38,9 +38,7 @@ def _cache_manager_empty(spark) -> bool:
 
 
 def test_no_raw_persist_left_in_registered_query_modules():
-    # Raw .persist() is allowed only when the SAME function unpersists it
-    # (dedup_clusters' edges, released at dedup.py before return). Every
-    # other persist must go through cache.managed_persist so the harness
+    # Every persist must go through cache.managed_persist so the harness
     # can release it.
     import pathlib
 
@@ -52,9 +50,7 @@ def test_no_raw_persist_left_in_registered_query_modules():
         for i, line in enumerate(p.read_text().splitlines(), 1):
             if ".persist(" in line and "managed_persist" not in line:
                 raw.append(p.name)
-    assert raw == ["dedup.py"], (  # dedup_clusters' edges, self-unpersisted
-        f"raw persist() without managed_persist/unpersist pairing: {raw}"
-    )
+    assert raw == [], f"raw persist() outside managed_persist: {raw}"
 
 
 def test_managed_persist_release_empties_spark_cache(spark):

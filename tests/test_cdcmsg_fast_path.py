@@ -173,3 +173,31 @@ def test_decoder_refuses_fixed_and_group_wire_types(wtype):
     wire = encode_cdcmsg("p", "c", "", "", "", 0, False, b"x") + bytes([(9 << 3) | wtype]) + bytes(8)
     with pytest.raises(ValueError, match="unsupported wire type"):
         decode_cdcmsg(wire)
+
+
+def test_encode_col_null_qos_and_retain_omit_the_field(spark):
+    # The Spark UDF hands the encoder pandas columns: a nullable int column
+    # holding a NULL arrives as float64 NaN, which must encode like an
+    # omitted field, not raise on int(nan).
+    from pyspark.sql import functions as F
+
+    from node_cdc_nats_spark.functions.cdcmsg import FIELDS, encode_col
+
+    rows = [
+        ("nms", "a", "json", "http", "", None, True, b"x"),
+        ("nms", "b", "json", "http", "", 2, None, b"y"),
+        ("nms", "c", "json", "http", "", None, None, b"z"),
+        ("nms", "d", "json", "http", "", 1, False, b"w"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "publisher string, channel string, contentType string, protocol string, "
+        "reply string, QOS int, retain boolean, payload binary",
+    )
+    got = {
+        r.channel: bytes(r.w)
+        for r in df.select("channel", encode_col(F.struct(*FIELDS)).alias("w")).collect()
+    }
+    assert got == {
+        r[1]: encode_cdcmsg(*r[:5], r[5] or 0, r[6] or False, r[7]) for r in rows
+    }

@@ -213,15 +213,39 @@ def test_deep_chain_converges_to_one_component(spark, tmp_path_factory):
     assert [r.doc_id for r in rows if r.is_canonical] == [0]
 
 
-def test_over_budget_chain_raises_loudly(spark, tmp_path_factory):
-    """A diameter-60 path cannot converge in the 50-round budget; the
-    guard must raise (a silent cap would emit a split cluster instead —
-    the failure mode the guard exists to prevent)."""
+def test_over_budget_chain_raises_loudly(spark, tmp_path_factory, monkeypatch):
+    """A diameter-60 path: the shared pointer-jumping core covers it in the
+    default budget (one cluster, doc 0 canonical), and with the budget cut
+    to 3 rounds the guard must raise (a silent cap would emit a split
+    cluster instead — the failure mode the guard exists to prevent)."""
+    from node_cdc_nats_spark.operators import graph
     from node_cdc_nats_spark.operators.dedup import dedup_clusters
 
     chain = _chain_dir(spark, tmp_path_factory, 61)
-    with pytest.raises(RuntimeError, match="did not converge in 50 rounds"):
+    rows = dedup_clusters(spark, chain).collect()
+    assert {(r.cluster_id, r.cluster_size) for r in rows} == {(0, 61)}
+    assert [r.doc_id for r in rows if r.is_canonical] == [0]
+
+    monkeypatch.setattr(graph, "CC_MAX_ITERS", 3)
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
         dedup_clusters(spark, chain)
+
+
+def test_pairless_corpus_is_all_singletons(spark, tmp_path_factory):
+    """No near-dup pair at all: the connected-components core runs on an
+    empty edge set, and every document comes back as the canonical member
+    of its own size-1 cluster."""
+    from node_cdc_nats_spark.operators.dedup import dedup_clusters, dedup_minhash
+
+    texts = [" ".join(f"d{i}w{k}" for k in range(12)) for i in range(5)]
+    rows = [(i, t, "en", "solo", len(t)) for i, t in enumerate(texts)]
+    out = tmp_path_factory.mktemp("pairless")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.parquet(str(out / "documents.parquet"))
+    assert dedup_minhash(spark, str(out)).collect() == []
+    got = sorted(tuple(r) for r in dedup_clusters(spark, str(out)).collect())
+    assert got == [(i, i, 1, True) for i in range(5)]
 
 
 def test_multiband_band0_bitmatches_base_udf(spark):

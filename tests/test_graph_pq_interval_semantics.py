@@ -649,3 +649,56 @@ def test_modularity_zero_intra_star_oscillation(spark, tmp_path):
         for r in G.graph_modularity(spark, sf).collect()
     ]
     assert got == [(1, 3, 0, 3, -0.25), (2, 1, 0, 3, -0.25)]
+
+
+def _edge_rows(edges):
+    """One two-line order per undirected edge."""
+    t0 = dt.datetime(2024, 1, 1)
+    return [
+        (ok, pk, 1, ln, t0)
+        for ok, pair in enumerate(edges, start=1)
+        for ln, pk in enumerate(pair, start=1)
+    ]
+
+
+def test_observed_metrics_equal_recount(spark, tmp_path, tmp_path_factory, monkeypatch):
+    """The fused loops read every round counter off an Observation riding
+    the checkpoint job (graph._checkpoint). For every call, an ordinary
+    aggregate of the same metric expressions over the returned frame must
+    give the observed values — over the CC, k-core and dedup_clusters
+    hand fixtures (multi-round in each)."""
+    from node_cdc_nats_spark.operators import graph as G
+    from node_cdc_nats_spark.operators.dedup import dedup_clusters
+    from tests.test_dedup_caps import _chain_dir
+
+    real = G._checkpoint
+    calls = []
+
+    def recounted(df, **metrics):
+        out, got = real(df, **metrics)
+        again = out.agg(*(c.alias(k) for k, c in metrics.items())).first()
+        calls.append((dict(got), again.asDict()))
+        return out, got
+
+    monkeypatch.setattr(G, "_checkpoint", recounted)
+    monkeypatch.setattr(G, "KCORE_K", 3)
+    cc = tmp_path / "cc"
+    cc.mkdir()
+    kc = tmp_path / "kc"
+    kc.mkdir()
+    runs = {
+        "cc": lambda: G.graph_connected_components(spark, _write_lineitem(
+            cc, _edge_rows([(1, 2), (2, 3), (1, 3), (10, 11), (11, 12),
+                            (12, 13), (30, 31)]))),
+        "kcore": lambda: G.graph_k_core(spark, _write_lineitem(
+            kc, _edge_rows([(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+                            (1, 5), (2, 5), (5, 6)]))),
+        "dedup": lambda: dedup_clusters(
+            spark, _chain_dir(spark, tmp_path_factory, 22)),
+    }
+    for name, run in runs.items():
+        calls.clear()
+        run().collect()
+        for got, again in calls:
+            assert got == again, (name, calls)
+        assert len(calls) >= 3, (name, calls)  # init + two or more rounds

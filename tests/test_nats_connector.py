@@ -176,6 +176,29 @@ def test_tcp_pub_sub_roundtrip(broker):
     sub.close()
 
 
+def test_idle_subscriber_keeps_its_connection(broker):
+    """A subscriber on a quiet subject for longer than the 10 s connect
+    timeout must keep its one connection: silence is not a dropped link,
+    so no redial happens, and a message published afterwards still
+    arrives."""
+    sub = NatsClient(f"nats://127.0.0.1:{broker.port}", reconnect_time_wait=0.05)
+    sub.subscribe("cdc.quiet", sid=5)
+    _wait_for_sub(broker)
+    got = {}
+    t = threading.Thread(target=lambda: got.update(msg=sub.next_msg()), daemon=True)
+    t.start()
+    time.sleep(11)
+    with broker.lock:
+        assert len(broker.conns) == 1
+    assert sub._gen == 1
+    pub = NatsClient(f"nats://127.0.0.1:{broker.port}")
+    pub.publish("cdc.quiet", b"after-idle")
+    t.join(timeout=10)
+    assert got.get("msg") == ("cdc.quiet", b"after-idle")
+    pub.close()
+    sub.close()
+
+
 def test_reconnect_replays_subscriptions(broker):
     # The reference rides nats.js's reconnect machinery (lib/nats.js:56 via
     # NATS.connect defaults); the engine's client must survive a broker
@@ -832,3 +855,30 @@ def test_tcp_sink_fails_when_broker_closes_before_info(stub_task):
     assert not t.is_alive(), "write() hung on a broker that closed before INFO"
     assert isinstance(outcome.get("exc"), NatsError), outcome
     assert outcome["exc"].code == CONN_CLOSED
+
+
+def test_nats_roundtrip_removes_its_spool_and_checkpoints(spark, monkeypatch):
+    """nats_roundtrip's spool and its two streaming checkpoints are
+    throwaway: none of them may outlive the call, while the returned frame
+    (the memory sink) still reads every row."""
+    import os
+    import tempfile
+
+    from node_cdc_nats_spark import registry
+    from tests.conftest import SF_DIR
+
+    registry.load_all()
+    made = []
+    real = tempfile.mkdtemp
+
+    def recording(*args, **kwargs):
+        path = real(*args, **kwargs)
+        made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording)
+    rows = registry.QUERIES["nats_roundtrip"](spark, SF_DIR).collect()
+    assert len(rows) == spark.read.parquet(os.path.join(SF_DIR, "events.parquet")).count()
+    ours = [p for p in made if os.path.basename(p).startswith(("nats_spool_", "ckpt_"))]
+    assert len(ours) == 3, made
+    assert [p for p in ours if os.path.exists(p)] == []
