@@ -16,7 +16,7 @@ The contract:
   default — identical plans, identical storage semantics) and records the
   handle in a ledger keyed by the owning SparkSession.
 - The harness that owns the consuming action — ``bench.py`` after each
-  query's timed runs, ``scratch_verify_driver.py`` after each oracle
+  query's timed runs, ``scripts/verify_driver.py`` after each oracle
   comparison, a user application whenever a query's results have been
   materialized — calls :func:`release_persisted` to unpersist everything
   the ledger holds. Releasing is always safe: an unpersisted DataFrame

@@ -27,25 +27,9 @@ from pyspark.sql import Column, functions as F
 
 
 def mqtt_to_regex(pattern: str) -> str:
-    """Compile an MQTT wildcard pattern to an anchored regex string."""
-    parts: list[str] = []
-    segments = pattern.split("/")
-    for i, seg in enumerate(segments):
-        if seg.startswith("#"):
-            if i != len(segments) - 1:
-                raise ValueError(f"'#' must be the last segment: {pattern!r}")
-            # '#' consumes the remainder including the preceding separator
-            # (so 'a/#' matches 'a' itself per mqtt-pattern semantics).
-            if parts:
-                parts[-1] += "(/.*)?"
-            else:
-                parts.append(".*")
-            return "^" + "/".join(parts) + "$"
-        if seg.startswith("+"):
-            parts.append("[^/]+")
-        else:
-            parts.append(re.escape(seg))
-    return "^" + "/".join(parts) + "$"
+    """Compile an MQTT wildcard pattern to an anchored regex string (named
+    wildcards become capture groups; they match exactly as unnamed ones)."""
+    return _capture_regex(pattern)[0]
 
 
 def matches(pattern: str, topic: str) -> bool:
@@ -98,6 +82,8 @@ def _capture_regex(pattern: str) -> tuple[str, list[tuple[str, str, int]]]:
         if seg.startswith("#"):
             if i != len(segments) - 1:
                 raise ValueError(f"'#' must be the last segment: {pattern!r}")
+            # '#' consumes the remainder including the preceding separator
+            # (so 'a/#' matches 'a' itself per mqtt-pattern semantics).
             name = seg[1:]
             if name:
                 gid += 1

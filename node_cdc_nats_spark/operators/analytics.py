@@ -183,11 +183,8 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared with the streaming twin (streaming/retention.py) so both register
-# the byte-identical oracle; the batch function body below is deliberately
-# untouched (its r9 driver green stays valid — the twin re-expresses the
-# report tail and tests/test_streaming_twins_timelines.py pins the two
-# code paths to equal output).
+# Shared with the streaming twin (streaming/retention.py): both ops register
+# this oracle and build their result with retention_report.
 RETENTION_ORACLE = """
     WITH firsts AS (
       SELECT user_id, ts,
@@ -208,31 +205,34 @@ RETENTION_ORACLE = """
     """
 
 
+def retention_report(active: DataFrame) -> DataFrame:
+    """The cohort table over ``(user_id, first_ts, wk)`` rows (a user's
+    first event time and one week they were active in): cohort = Monday-
+    anchored week of ``first_ts``, offset = whole weeks from it to ``wk``,
+    then the two-level dedup-then-count of distinct users per cell."""
+    cohort = F.date_trunc("week", F.col("first_ts")).cast("date")
+    offset = (F.datediff(F.col("wk").cast("date"), cohort) / 7).cast("long")
+    return (
+        active.select(cohort.alias("cohort_week"), offset.alias("week_offset"), "user_id")
+        .distinct()
+        .groupBy("cohort_week", "week_offset")
+        .agg(F.count(F.lit(1)).alias("n_users"))
+        .orderBy("cohort_week", "week_offset")
+    )
+
+
 @register("retention_cohorts", oracle=RETENTION_ORACLE)
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention: cohort = Monday-anchored week of the
     user's first event; count distinct users active at each week offset.
     One user_id window shuffle + the two-level dedup-then-count."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    first_ts = F.min("ts").over(Window.partitionBy("user_id"))
-    cohort = F.date_trunc("week", F.col("first_ts"))
-    offset = (
-        F.datediff(
-            F.date_trunc("week", F.col("ts")).cast("date"), cohort.cast("date")
-        )
-        / 7
-    ).cast("long")
-    return (
-        ev.withColumn("first_ts", first_ts)
-        .select(
-            cohort.cast("date").alias("cohort_week"),
-            offset.alias("week_offset"),
+    ev = load_table(spark, sf_dir, "events")
+    return retention_report(
+        ev.select(
             "user_id",
+            F.min("ts").over(Window.partitionBy("user_id")).alias("first_ts"),
+            F.date_trunc("week", F.col("ts")).alias("wk"),
         )
-        .distinct()
-        .groupBy("cohort_week", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("cohort_week", "week_offset")
     )
 
 

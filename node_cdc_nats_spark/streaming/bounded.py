@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..functions.mqtt import mqtt_to_regex
-from ..operators.cdc import SUBSCRIPTIONS, dispatch_subs
+from ..operators.cdc import (
+    _CHANNEL_SQL, SUBSCRIPTIONS, _subs_sql_values, dispatch_subs, with_channel,
+)
 from ..registry import register
 from .source import N_FILES, read_events_stream, run_to_memory
 
@@ -74,10 +75,9 @@ def _make_counter_fn():
       FROM (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts,
                    CAST(FLOOR(event_id * {N_FILES}.0 /
                         (SELECT MAX(event_id) + 1 FROM events)) AS INT) AS b,
-                   CONCAT('cdc/', event_type, '/', CAST(user_id % 10 AS VARCHAR)) AS channel
+                   {_CHANNEL_SQL} AS channel
             FROM events) e
-      JOIN (VALUES {", ".join(f"('{sid}', '{mqtt_to_regex(pat)}', {mx})" for sid, pat, mx in SUBSCRIPTIONS)})
-             AS s(sub_id, pattern_re, max_n)
+      JOIN {_subs_sql_values()}
         ON REGEXP_MATCHES(e.channel, s.pattern_re))
     SELECT sub_id, event_id, CAST(rn AS BIGINT) AS delivery_no
     FROM dispatched WHERE rn <= max_n
@@ -88,10 +88,6 @@ def stream_bounded_subscription(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic delivery order (batch, ts, event_id) with a window and
     keeps rn <= max — the same rows the stateful counter lets through."""
     src = read_events_stream(spark, sf_dir)
-    chan = F.concat(
-        F.lit("cdc/"), F.col("event_type"), F.lit("/"),
-        (F.col("user_id") % 10).cast("string"),
-    )
     # Map-side literal-regex multicast (dispatch_subs) with a literal
     # max_n lookup — no stream-static join at all; the stream reaches the
     # counter having only passed a projection.
@@ -99,9 +95,7 @@ def stream_bounded_subscription(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.when(F.col("sub_id") == sid, F.lit(mx)) for sid, _, mx in SUBSCRIPTIONS]
     )
     fanned = (
-        dispatch_subs(
-            src.withColumn("channel", chan).select("event_id", "ts", "channel")
-        )
+        dispatch_subs(with_channel(src).select("event_id", "ts", "channel"))
         .select("sub_id", "event_id", "ts", max_n.alias("max_n"))
     )
     counted = fanned.groupBy("sub_id").applyInPandasWithState(

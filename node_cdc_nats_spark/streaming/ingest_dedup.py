@@ -40,6 +40,7 @@ same story as the batch pair, now load-bearing across micro-batches.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -186,6 +187,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thousand rows, so 32 shuffle tasks per job would be pure scheduling
     # overhead at fixture scale (a production ingest sizes this to its
     # shipment volume).
+    ckpt = _ckpt_dir()
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
@@ -197,11 +199,13 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the per-trigger machinery cost.
             read_documents_stream(spark, sf_dir, files_per_trigger=2)
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", _ckpt_dir())
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        # The result is the kept table, not the checkpoint.
+        shutil.rmtree(ckpt, ignore_errors=True)
     return read_kept()

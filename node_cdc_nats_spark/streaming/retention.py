@@ -9,19 +9,16 @@ implements natively — the cohort anchor is ``MIN(ts)`` (only ever
 decreases) and the activity record is ``collect_set(week(ts))`` (only ever
 grows). So the whole incremental layer is one update-mode
 ``groupBy(user_id).agg(min, collect_set)``; the sink accumulates per-user
-emissions and the registered query folds them with the identical
-cohort/offset/dedup/count tail the batch operator computes, making the
-oracle the batch operator's verbatim (same ``RETENTION_ORACLE`` constant).
+emissions and the registered query folds them into per-(user, week) rows
+for the batch operator's own report tail (``retention_report``), so the
+oracle is the batch operator's verbatim (same ``RETENTION_ORACLE``).
 
 Monotonicity is also why equivalence has no watermark caveat: a user's
 final emission carries their true global MIN(ts) and their full week set
 regardless of replay disorder or trigger phasing, so MIN/union over the
 update-mode emissions equals the batch answer over all data under ANY
 arrival order (pinned in tests/test_streaming_twins_timelines.py, which
-also pins this twin against the batch operator's own output — the two
-report tails are separate code on purpose: re-using the tail would have
-redefined the batch op and burned a verification head slot, so the
-equivalence TEST is what prevents drift instead).
+also pins this twin against the batch operator's own output).
 
 Scale: state is one timestamp + one set of distinct week-starts per user —
 bounded by the calendar (a 5-year-active user holds ~260 entries), never
@@ -40,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.analytics import RETENTION_ORACLE
+from ..operators.analytics import RETENTION_ORACLE, retention_report
 from ..registry import register
 from .source import read_events_stream, run_to_memory
 
@@ -49,8 +46,8 @@ from .source import read_events_stream, run_to_memory
 def stream_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``retention_cohorts`` (module docstring): update-
     mode per-user (min first-event, distinct-week set) from native
-    streaming MIN + collect_set, folded into the cohort table by the same
-    cohort/offset arithmetic; both signals are monotone, so the result is
+    streaming MIN + collect_set, folded into the cohort table by the batch
+    operator's own report tail; both signals are monotone, so the result is
     independent of arrival order and trigger phasing."""
     src = read_events_stream(spark, sf_dir, files_per_trigger=4)
     per_user_updates = src.groupBy("user_id").agg(
@@ -61,23 +58,8 @@ def stream_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A user re-emits whenever a trigger touches them; first_ts only
     # decreases and wks only grows, so MIN / exploded-union over the
     # emissions equals the batch window over all data.
-    marked = (
+    return retention_report(
         sink.select("user_id", "first_ts", F.explode("wks").alias("wk"))
         .groupBy("user_id", "wk")
         .agg(F.min("first_ts").alias("first_ts"))
-    )
-    cohort = F.date_trunc("week", F.col("first_ts"))
-    offset = (
-        F.datediff(F.col("wk").cast("date"), cohort.cast("date")) / 7
-    ).cast("long")
-    return (
-        marked.select(
-            cohort.cast("date").alias("cohort_week"),
-            offset.alias("week_offset"),
-            "user_id",
-        )
-        .distinct()
-        .groupBy("cohort_week", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("cohort_week", "week_offset")
     )

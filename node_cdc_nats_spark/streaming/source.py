@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -273,6 +274,9 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         spark.conf.set("spark.sql.streaming.minBatchesToRetain", old_retain)
+        # The result is the memory sink; the checkpoint is dead once the
+        # query has terminated.
+        shutil.rmtree(ckpt, ignore_errors=True)
     table = spark.table(name)
     return (table, query) if with_query else table
 

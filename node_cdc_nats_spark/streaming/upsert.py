@@ -18,6 +18,7 @@ overwrite with file-level merge-on-read.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
@@ -79,13 +80,17 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["df"] = merge_latest(state["df"], batch_df).localCheckpoint(eager=True)
 
     ckpt = _ckpt_dir()
-    q = (
-        src.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            src.writeStream.foreachBatch(merge)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # The result is the target parquet, not the checkpoint.
+        shutil.rmtree(ckpt, ignore_errors=True)
     out = state["df"]
     out.write.mode("overwrite").parquet(target)  # prove the sink path too
     return spark.read.parquet(target).withColumn(
@@ -161,13 +166,17 @@ def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["df"] = merge_scd2(state["df"], batch_df).localCheckpoint(eager=True)
 
     ckpt = _ckpt_dir()
-    q = (
-        src.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            src.writeStream.foreachBatch(merge)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # The result is the target parquet, not the checkpoint.
+        shutil.rmtree(ckpt, ignore_errors=True)
     out = state["df"]
     if out is None:  # empty source: no batches delivered any rows
         out = spark.createDataFrame(

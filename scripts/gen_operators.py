@@ -1,14 +1,18 @@
 #!/usr/bin/env python
 """Regenerate OPERATORS.md from the query registry."""
+import os
 import re
+import sys
 
-from node_cdc_nats_spark import registry
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from node_cdc_nats_spark import registry  # noqa: E402
 
 registry.load_all()
 lines = [
     "# Operator inventory",
     "",
-    "Auto-generated from the query registry (`python scripts_gen_operators.py` --",
+    "Auto-generated from the query registry (`python scripts/gen_operators.py` --",
     "regenerate after adding operators). One row per `queries()` entry in the",
     "driver contract; 'oracle' marks DuckDB value-hash verification at sf0.01",
     "(rows-only entries are iterative/approximate ops per the contract).",

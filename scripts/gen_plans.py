@@ -3,8 +3,13 @@
 the evidence behind the scale claims (pushdown, broadcast choice, zero-
 shuffle bucketing, partition pruning)."""
 
-from node_cdc_nats_spark import registry
-from node_cdc_nats_spark.session import get_spark
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from node_cdc_nats_spark import registry  # noqa: E402
+from node_cdc_nats_spark.session import get_spark  # noqa: E402
 
 SHOWCASE = [
     (
@@ -269,7 +274,7 @@ def main() -> None:
     out = [
         "# Captured physical plans",
         "",
-        "Auto-generated (`python scripts_gen_plans.py`), sf0.01, AQE initial plans.",
+        "Auto-generated (`python scripts/gen_plans.py`), sf0.01, AQE initial plans.",
         "The plan-shape assertions in `tests/test_plan_shape.py` keep these claims",
         "true; this file is the human-readable evidence.",
         "",

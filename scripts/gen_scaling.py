@@ -15,20 +15,23 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 import time
 
 from pyspark.sql import functions as F
 
-from bench import HEADLINE
-from node_cdc_nats_spark import registry
-from node_cdc_nats_spark.session import get_spark
-from node_cdc_nats_spark.streaming.source import stage_events
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import HEADLINE  # noqa: E402
+from node_cdc_nats_spark import registry  # noqa: E402
+from node_cdc_nats_spark.session import get_spark  # noqa: E402
+from node_cdc_nats_spark.streaming.source import stage_events  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 # Derived sf1-equivalent corpus (r4 verdict task 1): the driver ships no
 # sf1, so we inflate sf0.1's documents 10x into a gitignored cache dir.
-SF1_DIR = "/root/repo/.scaling_sf1"
+SF1_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scaling_sf1")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -431,7 +434,7 @@ def main() -> None:
     out = [
         "# Measured scaling (1x / 10x / 100x data)",
         "",
-        "Auto-generated (`python scripts_gen_scaling.py`), local[32], steady",
+        "Auto-generated (`python scripts/gen_scaling.py`), local[32], steady",
         "state (all plans warmed). Columns are seconds per single run; ratio",
         "columns are time multipliers per 10x data growth. Near 1.0 = fixed",
         "cost dominates (launch/plan/state-store overhead — disappears on a",

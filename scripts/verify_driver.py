@@ -1,14 +1,17 @@
-"""Verify driver: vanilla session, cwd outside /root/repo, oracle spot-check.
+"""Verify driver: vanilla session, cwd outside the repository, oracle
+spot-check.
 
-Mimics the external driver's contract: imports __spark_entry__ from
-/root/repo, runs entry() plus a sample of queries() against their
-oracle_sql() counterparts at sf0.01 via DuckDB.
+Mimics the external driver's contract: imports __spark_entry__ from the
+repository root, runs entry() plus a sample of queries() against their
+oracle_sql() counterparts at sf0.01 via DuckDB. Run it from another
+directory (``cd /tmp && python <repo>/scripts/verify_driver.py [names]``)
+so that Spark's Python workers do not find the package on their path.
 """
 
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

@@ -92,6 +92,13 @@ class FakeBroker:
         the listener keeps accepting, so clients can redial."""
         with self.lock:
             for c in self.conns:
+                # shutdown first: a bare close() while this conn's _serve
+                # thread is blocked in recv() leaves the socket open in the
+                # kernel, so the client never sees the drop.
+                try:
+                    c.shutdown(socket.SHUT_RDWR)
+                except OSError:
+                    pass
                 try:
                     c.close()
                 except OSError:
@@ -138,6 +145,12 @@ class FakeBroker:
 
     def close(self):
         self.alive = False
+        # Same as drop_clients: shutdown wakes the accept() blocked in
+        # _accept_loop, so the listener really stops accepting.
+        try:
+            self.server.shutdown(socket.SHUT_RDWR)
+        except OSError:
+            pass
         self.server.close()
 
 

@@ -19,7 +19,7 @@ from .conftest import SF_DIR, SF_DIR_ORACLE
 registry.load_all()
 
 # -- MQTT compiler: property-based vs the independent matcher ------------------
-seg = st.sampled_from(["a", "b", "cc", "+", "#", "dev1"])
+seg = st.sampled_from(["a", "b", "cc", "+", "#", "dev1", "+id", "#rest"])
 topic_seg = st.sampled_from(["a", "b", "cc", "dev1", "x"])
 
 
@@ -30,7 +30,7 @@ topic_seg = st.sampled_from(["a", "b", "cc", "dev1", "x"])
 )
 def test_mqtt_regex_matches_reference_matcher(p_segs, t_segs):
     # '#' is only legal as the last segment; mirror that in generation.
-    p_segs = [s if i == len(p_segs) - 1 else ("+" if s == "#" else s) for i, s in enumerate(p_segs)]
+    p_segs = [s if i == len(p_segs) - 1 else s.replace("#", "+") for i, s in enumerate(p_segs)]
     pattern = "/".join(p_segs)
     topic = "/".join(t_segs)
     assert bool(re.fullmatch(mqtt_to_regex(pattern)[1:-1], topic)) == matches(

@@ -493,3 +493,32 @@ def test_stream_anomaly_zscore_accumulates_across_batches(spark, zscore_dir):
     eid, etype, value, z = got[0]
     assert (eid, etype, value) == (1, "m", 100.0)
     assert z == (100.0 - m) / sd
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_upsert", "stream_tumble", "stream_dedup_incremental"]
+)
+def test_streaming_ops_remove_their_checkpoints(spark, monkeypatch, name):
+    """A bounded run's checkpoint is throwaway: stream_upsert (foreachBatch
+    into a parquet target), stream_tumble (run_to_memory's memory sink) and
+    stream_dedup_incremental (the kept table) each remove it once the query
+    has terminated, while the returned frame still reads its rows."""
+    import os
+    import tempfile
+
+    from tests.conftest import SF_DIR
+
+    made = []
+    real = tempfile.mkdtemp
+
+    def recording(*args, **kwargs):
+        path = real(*args, **kwargs)
+        made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording)
+    rows = registry.QUERIES[name](spark, SF_DIR).collect()
+    assert rows
+    ckpts = [p for p in made if os.path.basename(p).startswith("ckpt_")]
+    assert len(ckpts) == 1, made
+    assert [p for p in ckpts if os.path.exists(p)] == []

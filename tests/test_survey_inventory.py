@@ -93,131 +93,71 @@ def test_survey_matrix_count_matches_registry():
     )
 
 
-def test_green_demotion_lists_are_sound():
-    # Every listed name must actually exist (a typo would silently waste a
-    # head slot), ops whose definition changed in round 10 must sit in the
-    # head (their prior green rows verified old definitions), and the
-    # per-round evidence lists must be mutually disjoint and cover the
-    # whole registry.
-    from node_cdc_nats_spark.registry import (
-        _R8_GREEN,
-        _R9_GREEN,
-        _R10_GREEN,
-        _R11_GREEN,
-        _R12_GREEN,
-        _VERIFY_HEAD,
-    )
-
-    lists = (
-        (_VERIFY_HEAD, "_VERIFY_HEAD"),
-        (_R8_GREEN, "_R8_GREEN"),
-        (_R9_GREEN, "_R9_GREEN"),
-        (_R10_GREEN, "_R10_GREEN"),
-        (_R11_GREEN, "_R11_GREEN"),
-        (_R12_GREEN, "_R12_GREEN"),
-    )
-    for lst, label in lists:
-        unknown = [n for n in lst if n not in registry.QUERIES]
-        assert not unknown, f"{label} names not registered: {unknown}"
-        assert len(set(lst)) == len(lst), f"{label} has duplicates"
-    seen: set[str] = set()
-    for lst in (
-        _R8_GREEN, _R9_GREEN, _R10_GREEN, _R11_GREEN, _R12_GREEN,
-    ):
-        dup = seen & set(lst)
-        assert not dup, f"evidence lists overlap: {dup}"
-        seen |= set(lst)
-    # FULL partition: every registered op must carry a status (head or an
-    # evidence list). A brand-new op that is in neither fails HERE loudly,
-    # and load_all additionally orders such an op right after the head so
-    # the driver verifies it even if this assertion is ignored.
-    unlisted = set(registry.QUERIES) - seen - set(_VERIFY_HEAD)
-    assert not unlisted, (
-        f"ops with no verification status (add to _VERIFY_HEAD): {unlisted}"
-    )
-    changed_in_r13 = {
-        # impl changed — the final component-sizes join side now rides the
-        # CC_BROADCAST_MAX_NODES dial (the r12 `weak`: Θ(|V|)-row sizes
-        # table was broadcast unconditionally):
-        "graph_connected_components",
-        # impl changed — composite frame id decomposed with shiftright
-        # instead of double division (ADVICE r12):
-        "multimodal_dedup_video",
-        # impl changed — moments/z-tail refactored into the shared
-        # anomaly_moments/zscore_flags helpers (same expressions; the
-        # definition moved, so the r10 green verified old code):
-        "events_anomaly_zscore",
-        # new in r13 — streaming anomaly twin (additive DECIMAL moment
-        # sums as native update-mode aggregates, max_by(n) fold, shared
-        # z-flag tree):
-        "stream_anomaly_zscore",
-        # new in r13 — iterative k-core peeling on the CC loop skeleton:
-        "graph_k_core",
-        # impl changed — the Lloyd trainer moved into the shared
-        # _lloyd_centroids helper embed_dedup_semantic composes:
-        "ann_ivf_learned",
-        # new in r13 — SemDeDup-style semantic dedup over the learned IVF
-        # cells (anchor-bounded in-cell cosine election):
-        "embed_dedup_semantic",
-        # new in r13 — Newman modularity of the LPA partition (the
-        # decision-ready score on top of graph_label_propagation, whose
-        # superstep loop it deliberately duplicates so the LPA op's green
-        # survives — the retention-twin precedent):
-        "graph_modularity",
-    }
-    assert changed_in_r13 == set(_VERIFY_HEAD)
-    # Head ops must occupy the first len(_VERIFY_HEAD) slots.
-    names = list(registry.QUERIES)
-    assert names[: len(_VERIFY_HEAD)] == list(_VERIFY_HEAD)
+def _walk_order(monkeypatch, evidence_dir) -> list[str]:
+    """The registry order load_all computes from ``evidence_dir``; the
+    real order is restored before returning."""
+    with monkeypatch.context() as m:
+        m.setattr(registry, "_EVIDENCE_DIR", evidence_dir)
+        registry.load_all()
+        names = list(registry.QUERIES)
+    registry.load_all()
+    return names
 
 
-def test_oldest_evidence_fills_the_driver_budget():
-    # The point of the per-round reorder: the driver's 50 verification
-    # slots go to the round-13-redefined head and then the OLDEST
-    # evidence (the remaining r8 greens), refreshing stale rows before
-    # fresh r9/r10/r11/r12 rows burn slots.
-    from node_cdc_nats_spark.registry import (
-        _R8_GREEN,
-        _R9_GREEN,
-        _VERIFY_HEAD,
-    )
+def test_verify_head_fills_the_first_slots():
+    # A typo would fail load_all; a duplicate would waste a slot; a head
+    # past the driver's 50-slot budget would leave a changed op unverified.
+    head = registry._VERIFY_HEAD
+    assert not [n for n in head if n not in registry.QUERIES]
+    assert len(set(head)) == len(head), "_VERIFY_HEAD has duplicates"
+    assert len(head) <= 50
+    assert list(registry.QUERIES)[: len(head)] == list(head)
 
-    names = list(registry.QUERIES)
-    priority = list(_VERIFY_HEAD) + list(_R8_GREEN) + list(_R9_GREEN)
-    assert names[: len(priority)] == priority[: len(priority)]
-    # The walk must clear the ENTIRE r8 evidence tail this round (VERDICT
-    # r12 item 2's Done bar: no op's latest green older than r9):
-    # head + all 42 r8 <= 50.
-    assert len(_VERIFY_HEAD) + len(_R8_GREEN) <= 50, (
-        "head too large — the 50-slot walk would leave r8-era greens "
-        "unrefreshed"
-    )
-    # The 50-slot budget must at least cover the head (never-verified or
-    # redefined ops — those have NO valid green and cannot wait). The
-    # oldest-evidence blocks queue right behind it and may spill past
-    # slot 50 into the next round's budget — that is the correct
-    # degradation order (ops with a valid-if-stale green wait, freshest
-    # evidence waits longest).
-    assert len(_VERIFY_HEAD) <= 50, (
-        "head alone exceeds the 50-slot budget — a never-verified op "
-        "would miss this round's verification"
-    )
+
+def test_tail_refreshes_the_oldest_evidence_first():
+    rank = registry._newest_green()
+    tail = list(registry.QUERIES)[len(registry._VERIFY_HEAD):]
+    rounds = [rank.get(n, 0) for n in tail]
+    assert rounds == sorted(rounds), "newest green round decreases after the head"
+
+
+def test_unverified_ops_follow_the_head(monkeypatch, tmp_path):
+    # One op missing from every evidence file and one whose newest row is
+    # not green both jump the whole evidence-ordered tail, in registration
+    # order; the real files put both at the very end.
+    import json
+
+    head = registry._VERIFY_HEAD
+    missing, failing = list(registry.QUERIES)[-2:]
+    for path in sorted(registry._EVIDENCE_DIR.glob("CORRECTNESS_r*.json")):
+        rows = json.loads(path.read_text())
+        rows.pop(missing, None)
+        if failing in rows:  # rounds are zero-padded: the last hit is the newest
+            name, newest = path.name, rows
+        (tmp_path / path.name).write_text(json.dumps(rows))
+    newest[failing] = dict(newest[failing], hash_match=False)
+    (tmp_path / name).write_text(json.dumps(newest))
+    names = _walk_order(monkeypatch, tmp_path)
+    first = [n for n in registry._REGISTERED if n in (missing, failing)]
+    assert names[len(head) : len(head) + 2] == first
+
+
+def test_without_evidence_the_tail_keeps_registration_order(monkeypatch, tmp_path):
+    head = list(registry._VERIFY_HEAD)
+    names = _walk_order(monkeypatch, tmp_path)
+    assert names == head + [n for n in registry._REGISTERED if n not in head]
 
 
 def test_bench_headline_names_are_registered_and_cover_new_ops():
-    # A typo in bench.py's HEADLINE silently drops a query from the
-    # per-round timing artifact; and the documented selection rule says
-    # every op added since r6 joins the headline the round it lands.
+    # A typo in bench.py's HEADLINE silently drops a query from the timing
+    # artifact; and the documented selection rule says a new op joins the
+    # headline when it lands. New means no evidence row in any
+    # CORRECTNESS_r*.json (a changed op keeps its bench placement).
     import bench
 
     unknown = [n for n in bench.HEADLINE if n not in registry.QUERIES]
     assert not unknown, f"HEADLINE names not registered: {unknown}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "HEADLINE dupes"
-    from node_cdc_nats_spark.registry import _VERIFY_HEAD
-
-    # Retuned/redefined ops keep their existing bench placement; the rule
-    # binds genuinely NEW ops only (r13: stream_anomaly_zscore and
-    # graph_k_core; the three redefined head ops were already headlined).
-    retuned = set()
-    missing = sorted(set(_VERIFY_HEAD) - retuned - set(bench.HEADLINE))
-    assert not missing, f"r13 ops absent from the bench headline: {missing}"
+    new = set(registry.QUERIES) - set(registry._newest_green())
+    missing = sorted(new - set(bench.HEADLINE))
+    assert not missing, f"new ops absent from the bench headline: {missing}"
