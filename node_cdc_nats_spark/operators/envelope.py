@@ -98,7 +98,7 @@ def nats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # writer partition per batch — the JetStream file-store shape;
     # sources/nats.py), so this publish writes 4 files in total rather
     # than a create+write+rename per message; reader offsets are
-    # (segment, byte-offset).
+    # per-partition sets of drained segment names.
     env_stream = _envelope_cols(read_events_stream(spark, sf_dir, single_batch=True))
     ckpt = _ckpt_dir()
     # Subscriber-first overlap: a LIVE continuous subscription (the broker

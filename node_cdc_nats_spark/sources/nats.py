@@ -9,11 +9,14 @@ Reference surface being reproduced (SURVEY.md §2.1):
   the logical subject rides in CDCMsg.channel) →
   ``df.writeStream.format("nats_cdc")``.
 - Delivery: core NATS is at-most-once with no replay, and so is the
-  reference (no acks/retries, `lib/nats.js:175-179`); the source therefore
-  advances its offset as it drains. Exactly-once at 100 TB means fronting
-  with JetStream (durable consumers expose real offsets; the reader's
-  offset dict would then carry the JetStream sequence instead of spool
-  positions) — the surface below doesn't change.
+  reference (no acks/retries, `lib/nats.js:175-179`). The spool source
+  can replay: its offsets name drained segments, so a batch whose
+  offsets were logged but whose commit was not is planned again from
+  the same segments on restart, and a transactional sink (parquet) then
+  holds every message exactly once. Over a real broker the same needs
+  JetStream (durable consumers expose real offsets; the per-partition
+  offsets would carry the JetStream sequence instead of segment names)
+  — the surface below doesn't change.
 
 Two transports, chosen by options:
 - ``spool``: a shared directory of SEGMENT files — an in-process stand-in
@@ -21,25 +24,27 @@ Two transports, chosen by options:
   server available). A segment holds many length-prefixed CDCMsg frames
   (4-byte big-endian length + envelope bytes — the JetStream file-store
   shape); each writer task emits ONE segment per micro-batch, made visible
-  atomically by rename. Lexicographic segment names give a total order;
-  the stream offset is a (segment, byte-offset) cursor. One segment per
-  partition per batch, rather than one file per message, saves a
-  create+write+rename per row (100k messages ≈ 8.5 s of syscalls
+  atomically by rename. Lexicographic segment names give a total order.
+  One segment per partition per batch, rather than one file per message,
+  saves a create+write+rename per row (100k messages ≈ 8.5 s of syscalls
   single-threaded) while leaving the wire format untouched.
 - ``tcp``: a minimal pure-Python core-NATS client (public text protocol:
   INFO/CONNECT/PING/PONG, PUB/SUB/MSG) used when ``url`` is passed. Import-
   and connect-failures surface as NatsError with the reference's error
   codes (`lib/nats.js:15-23`).
 
-Scale notes: the default reader is a SimpleDataSourceStreamReader
-(driver-side drain, like Spark's socket source) — correct for core-NATS
-semantics where there is exactly one subscription per engine (S1) and
-replay is impossible anyway. ``.option("partitions", N)`` selects the
-executor-parallel ``DataSourceStreamReader`` instead: N logical partitions
-hash the spool by filename, each carrying its own durable cursor in the
-offset — the JetStream-consumer shape, where drain throughput scales with
-the cluster rather than the single-driver ceiling. The sink writes per
-partition (one connection per task, like foreachPartition).
+One reader, executor-parallel: ``.option("partitions", N)`` (default 4)
+logical partitions hash the spool by segment name, and each partition's
+offset is a frontier plus a drained set (``NatsCdcStreamReader``). The
+driver only lists names; frame reads and envelope decode run in executor
+tasks, so drain throughput scales with the cluster — the JetStream-
+consumer shape. A planned segment is read whole. Every writer in this
+repository (the sink, ``spool_publish`` and ``perfbench/cdc.py``'s
+segment writer) renames complete segments into place, so a torn tail —
+a visible segment whose last frame is cut short — needs an outside
+writer that skips that protocol; the reader then keeps the complete
+frames and counts the segment drained. The sink writes per partition
+(one connection per task, like foreachPartition).
 
 The DataSource classes run on Spark's Python workers, which do not have
 this package on ``sys.path``. Like ``functions/cdcmsg.py``, whose codec
@@ -55,14 +60,12 @@ import time
 import zlib
 
 from pyspark import TaskContext, cloudpickle
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -111,8 +114,8 @@ class _Reconnected(Exception):
 # -- spool transport (in-process broker stand-in) ------------------------------
 # Segment frame layout: 4-byte big-endian unsigned length, then exactly that
 # many envelope bytes. Segments are immutable once renamed into place, so a
-# (segment, byte-offset) cursor that points at a frame boundary stays valid
-# forever — the JetStream file-store offset contract.
+# segment name, once drained, stays drained — the reader's offsets are
+# sets of names.
 _FRAME_HEADER = 4
 
 
@@ -127,18 +130,14 @@ def frame_messages(envelopes) -> bytes:
     return bytes(out)
 
 
-def read_frames(path: str, from_pos: int = 0, upto_pos: int | None = None):
-    """Yield (frame_start_pos, envelope_bytes) for every complete frame whose
-    START lies in [from_pos, upto_pos). ``from_pos`` must be a frame boundary
-    (0 or a previously returned end position). A truncated tail frame — only
-    possible if a writer bypassed the rename protocol — is ignored rather
-    than misparsed."""
+def read_frames(path: str):
+    """Yield (frame_start_pos, envelope_bytes) for every complete frame of a
+    segment. A truncated tail frame — only possible if a writer bypassed
+    the rename protocol — is ignored rather than misparsed."""
     size = os.path.getsize(path)
-    end = size if upto_pos is None else min(upto_pos, size)
     with open(path, "rb") as fh:
-        fh.seek(from_pos)
-        pos = from_pos
-        while pos + _FRAME_HEADER <= end:
+        pos = 0
+        while pos + _FRAME_HEADER <= size:
             ln = int.from_bytes(fh.read(_FRAME_HEADER), "big")
             if pos + _FRAME_HEADER + ln > size:
                 return  # torn tail: stop at the last complete frame
@@ -160,12 +159,10 @@ def spool_publish(spool_dir: str, seq: int, envelope: bytes, publisher: str = "p
     return name
 
 
-def spool_list(spool_dir: str, after: str = "") -> list[str]:
+def spool_list(spool_dir: str) -> list[str]:
     if not os.path.isdir(spool_dir):
         return []
-    return sorted(
-        f for f in os.listdir(spool_dir) if f.endswith(".seg") and f > after
-    )
+    return sorted(f for f in os.listdir(spool_dir) if f.endswith(".seg"))
 
 
 # -- minimal core-NATS TCP client ----------------------------------------------
@@ -379,118 +376,23 @@ def _spool_scan(spool_dir: str, stale_tmp_ms: int) -> tuple[list[str], list[str]
     return visible, pending
 
 
-class NatsCdcStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side drain (core-NATS parity default).
-
-    The offset is a COMPACT ENCODING OF THE DRAINED-SEGMENT SET, not a
-    single max-name cursor: ``seg`` is the frontier F (every visible
-    segment named <= F is drained, F itself up to ``pos``) and
-    ``drained`` lists the fully-drained segments named > F. Writers
-    rename segments into place in arbitrary order (a lower-named
-    ``.tmp`` can land AFTER a higher-named one in the same directory),
-    so a max-name cursor silently skips the late arrival. The frontier
-    therefore only advances below the minimum PENDING
-    ``.tmp`` name — writer intent is visible as ``.{name}.seg.tmp``
-    from task start, before any data bytes — and every drained segment
-    above F rides in ``drained`` until F passes it. Residual loss
-    windows, both documented rather than claimed away: (a) the
-    microseconds between a writer task learning its attempt id and
-    creating its tmp, and (b) a tmp idle past ``staleTmpMs`` (treated
-    as a crashed task's orphan; its retry re-emits under a fresh id)
-    that later completes anyway. A real deployment fronts this with
-    JetStream, whose broker-assigned sequences have no such window."""
-
-    def __init__(self, options):
-        self.spool = options.get("spool")
-        self.topic = options.get("topic", "cdc.client")
-        self.stale_tmp_ms = int(options.get("staleTmpMs", "60000"))
-
-    def initialOffset(self):
-        return {"seg": "", "pos": 0, "drained": []}
-
-    def read(self, start):
-        seg, pos = start.get("seg", ""), int(start.get("pos", 0))
-        prior = set(start.get("drained") or ())
-        if not self.spool or not os.path.isdir(self.spool):
-            return iter([]), start
-        visible, pending = _spool_scan(self.spool, self.stale_tmp_ms)
-        rows = []
-        torn_at = None  # (segment, byte-pos) of the first torn tail
-        done: list[str] = []  # fully drained this batch, sorted order
-        for name in sorted(visible):
-            if name < seg or (name > seg and name in prior):
-                continue  # encoded as drained by the start offset
-            path = os.path.join(self.spool, name)
-            p = pos if name == seg else 0
-            for at, env in read_frames(path, p):
-                rows.append(decode_fields(env))
-                p = at + _FRAME_HEADER + len(env)
-            if p < os.path.getsize(path):
-                # Torn tail (a writer bypassed the rename protocol): stop
-                # the whole drain HERE so the cursor lands exactly at the
-                # torn frame and the deferred bytes really are retried next
-                # batch; walking on to later names would orphan them.
-                torn_at = (name, p)
-                break
-            done.append(name)
-        if torn_at is not None:
-            # Frontier parks at the torn frame; everything above it is
-            # (by the stop-early rule) still undrained, so the empty
-            # exception list is exact.
-            return iter(rows), {
-                "seg": torn_at[0], "pos": torn_at[1], "drained": [],
-            }
-        # Advance the frontier over the drained set, gated below the
-        # minimum pending writer intent; carry the rest as exceptions.
-        drained_all = prior | set(done)
-        if seg:
-            drained_all.add(seg)
-        gate = min((p for p in pending if p > seg), default=None)
-        eligible = [n for n in drained_all if gate is None or n < gate]
-        new_seg = max(eligible, default=seg)
-        if new_seg < seg:
-            new_seg = seg
-        # Every segment in drained_all is fully drained on this (non-
-        # torn) path, so the frontier byte-pos is simply its size.
-        try:
-            new_pos = os.path.getsize(
-                os.path.join(self.spool, new_seg)
-            ) if new_seg else 0
-        except OSError:
-            new_pos = pos
-        return iter(rows), {
-            "seg": new_seg,
-            "pos": new_pos,
-            "drained": sorted(n for n in drained_all if n > new_seg),
-        }
-
-    def commit(self, end):
-        pass  # at-most-once: spool files are retained for inspection
-
-
-class NatsCdcPartitionedStreamReader(DataSourceStreamReader):
-    """Executor-parallel reader — the JetStream-shaped scale path
-    documented in the module docstring. N logical partitions hash the
-    spool by segment name (crc32 % N — stable across processes); each
-    bucket's offset is a compact encoding of its DRAINED-SEGMENT SET:
-    frontier ``seg`` (every visible bucket segment named <= it is
-    drained) plus ``drained``, the fully-drained names above it.
-    Writers rename segments into place in arbitrary order — a lower-
-    named task can land AFTER a higher-named one in the same bucket —
-    so a bare max-name cursor silently loses the late arrival. The
-    frontier therefore only advances below the minimum
-    pending ``.tmp`` name (writer intent is visible as
-    ``.{name}.seg.tmp`` from task start, before any data bytes); a
-    drained segment the frontier cannot yet pass rides in ``drained``.
-    ``latestOffset`` is STATELESS — the offset is derived from one
-    directory listing, so checkpoint restarts need no reader-side
-    memory — and ``partitions(start, end)`` plans the explicit name
-    delta, so executors read exactly the planned set. The driver only
-    LISTS names (+ one stat per bucket frontier); all frame reads +
-    envelope decode run in executor tasks, so drain throughput scales
-    with the cluster rather than the single-driver ceiling of the
-    SimpleDataSourceStreamReader (still the core-NATS parity default).
-    Selected with ``.option("partitions", N)``. Residual loss windows
+class NatsCdcStreamReader(DataSourceStreamReader):
+    """The ``nats_cdc`` stream reader: N logical partitions hash the spool
+    by segment name (crc32 % N — stable across processes); each bucket's
+    offset is a compact encoding of its DRAINED-SEGMENT SET: frontier
+    ``seg`` (every visible bucket segment named <= it is drained) plus
+    ``drained``, the fully-drained names above it. Writers rename
+    segments into place in arbitrary order — a lower-named task can land
+    AFTER a higher-named one in the same bucket — so a bare max-name
+    cursor silently loses the late arrival. The frontier therefore only
+    advances below the minimum pending ``.tmp`` name (writer intent is
+    visible as ``.{name}.seg.tmp`` from task start, before any data
+    bytes); a drained segment the frontier cannot yet pass rides in
+    ``drained``. ``latestOffset`` is STATELESS — the offset is derived
+    from one directory listing, so checkpoint restarts need no
+    reader-side memory — and ``partitions(start, end)`` plans the
+    explicit name delta, so executors read exactly the planned set, and
+    a replayed batch reads the same set again. Residual loss windows
     (documented, not claimed away): the microseconds between a writer
     task learning its attempt id and creating its tmp, and a tmp idle
     past ``staleTmpMs`` that completes anyway; JetStream's broker-
@@ -498,20 +400,17 @@ class NatsCdcPartitionedStreamReader(DataSourceStreamReader):
 
     def __init__(self, options):
         self.spool = options.get("spool")
-        self.topic = options.get("topic", "cdc.client")
         self.n = int(options.get("partitions", "4"))
         self.stale_tmp_ms = int(options.get("staleTmpMs", "60000"))
         # Per-trigger listing cache: Spark calls latestOffset() then
         # immediately partitions(start, end=that offset), and a second
         # directory scan would re-list what the first just saw.
         # latestOffset stashes (offset, visible) here and partitions
-        # reuses the listing when its `end` matches. This is not just
-        # cheaper (one listing per trigger instead of two, on a spool
-        # that only grows): planning from the EXACT snapshot that derived
-        # `end` is also the tighter contract — a segment renamed between
-        # the two scans is provably not selected by `end` (its pending
-        # tmp gated the frontier below it), so the rescan could never add
-        # rows, only work.
+        # reuses the listing when its `end` matches. Planning from the
+        # EXACT snapshot that derived `end` is also the tighter contract —
+        # a segment renamed between the two scans is provably not selected
+        # by `end` (its pending tmp gated the frontier below it), so the
+        # rescan could never add rows, only work.
         self._scan_cache: tuple[dict, list[str]] | None = None
         if self.n < 1:
             raise ValueError(f"partitions must be >= 1, got {self.n}")
@@ -520,21 +419,16 @@ class NatsCdcPartitionedStreamReader(DataSourceStreamReader):
     def _pid_of(name: str, n: int) -> int:
         return zlib.crc32(name.encode("utf-8")) % n
 
+    def _empty(self) -> dict:
+        return {"version": 3, "last": {str(i): {"seg": "", "drained": []} for i in range(self.n)}}
+
     def initialOffset(self):
-        return {
-            "version": 3,
-            "last": {
-                str(i): {"seg": "", "pos": 0, "drained": []}
-                for i in range(self.n)
-            },
-        }
+        return self._empty()
 
     def latestOffset(self):
         visible, pending = _spool_scan(self.spool, self.stale_tmp_ms)
-        last = {
-            str(i): {"seg": "", "pos": 0, "drained": []}
-            for i in range(self.n)
-        }
+        offset = self._empty()
+        last = offset["last"]
         by_bucket: dict[str, list[str]] = {k: [] for k in last}
         for f in visible:
             by_bucket[str(self._pid_of(f, self.n))].append(f)
@@ -544,29 +438,17 @@ class NatsCdcPartitionedStreamReader(DataSourceStreamReader):
             if key not in gates or f < gates[key]:
                 gates[key] = f
         for key, names in by_bucket.items():
-            if not names:
-                continue
             gate = gates.get(key)
-            below = [n for n in names if gate is None or n < gate]
             cur = last[key]
-            cur["seg"] = max(below, default="")
+            cur["seg"] = max((n for n in names if gate is None or n < gate), default="")
             cur["drained"] = sorted(n for n in names if n > cur["seg"])
-            if cur["seg"]:
-                try:
-                    cur["pos"] = os.path.getsize(
-                        os.path.join(self.spool, cur["seg"])
-                    )
-                except OSError:
-                    cur["pos"] = 0
-        offset = {"version": 3, "last": last}
         self._scan_cache = (offset, visible)
         return offset
 
     def partitions(self, start, end):
-        def selected(off, name):
-            return name <= off.get("seg", "") or name in off.get(
-                "drained_set", ()
-            )
+        def drained(off):
+            seg, above = off.get("seg", ""), frozenset(off.get("drained") or ())
+            return lambda name: name <= seg or name in above
 
         # Reuse latestOffset's listing when planning the batch it just
         # derived (the common per-trigger sequence); rescan only on a
@@ -578,21 +460,11 @@ class NatsCdcPartitionedStreamReader(DataSourceStreamReader):
         s_last = start.get("last", {})
         out = []
         for key, upto in end.get("last", {}).items():
-            after = s_last.get(key, {})
-            a = {
-                "seg": after.get("seg", ""),
-                "drained_set": frozenset(after.get("drained") or ()),
-            }
-            u = {
-                "seg": upto.get("seg", ""),
-                "drained_set": frozenset(upto.get("drained") or ()),
-            }
+            now, before = drained(upto), drained(s_last.get(key, {}))
             names = sorted(
                 f
                 for f in visible
-                if self._pid_of(f, self.n) == int(key)
-                and selected(u, f)
-                and not selected(a, f)
+                if self._pid_of(f, self.n) == int(key) and now(f) and not before(f)
             )
             if names:
                 out.append(InputPartition((int(key), tuple(names))))
@@ -609,9 +481,8 @@ class NatsCdcPartitionedStreamReader(DataSourceStreamReader):
             # The plan names whole segments (segments are immutable once
             # renamed, so "the whole file" is a stable quantity). A torn
             # tail, only reachable if a writer bypassed the rename
-            # protocol, is skipped, not retried: the plan marks the
-            # segment drained (at-most-once holds; the rename contract is
-            # what makes tails whole).
+            # protocol, is skipped, not retried: the segment counts as
+            # drained (see the module docstring).
             cols: list[list] = [[] for _ in FIELDS]
             appends = [c.append for c in cols]
             for _, env in read_frames(os.path.join(self.spool, name)):
@@ -722,19 +593,6 @@ class NatsCdcDataSource(DataSource):
         return DECODED_SCHEMA
 
     def streamReader(self, schema):
-        # Executor-parallel JetStream-shaped reader, opt-in via
-        # .option("partitions", N); without it Spark falls back to
-        # simpleStreamReader (core-NATS parity, driver-side drain).
-        # The fallback in pyspark's datasource_internal._streamReader
-        # catches PySparkNotImplementedError specifically.
-        if "partitions" not in self.options:
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
-        return NatsCdcPartitionedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema):
         return NatsCdcStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite):

@@ -48,6 +48,74 @@ _STAGED: dict[tuple[str, str], str] = {}
 _MEM_SEQ = itertools.count()
 
 
+def _stage(key, df, id_col: str, prefix: str, scatter: bool = False) -> str:
+    """Write ``df`` as N_FILES parquet files, cache the directory under
+    ``key`` and return it. File i holds the rows whose ``id_col`` quartile
+    is i (``scatter``: whose ``id_col % N_FILES`` is i); its mtime is
+    pinned in file order, because FileStreamSource orders by modification
+    time. The write's scratch directory is removed."""
+    max_id = df.agg(F.max(id_col)).first()[0]
+    scratch = tempfile.mkdtemp()
+    try:
+        if max_id is None:
+            # Empty table: a fresh topic, not an error. Stage N_FILES
+            # schema-bearing empty parquet files so every downstream
+            # streaming op replays its micro-batches empty (the zero-row-
+            # batch path a live deployment hits on day one) instead of
+            # dying on arithmetic against a missing max.
+            df.limit(0).coalesce(1).write.mode("overwrite").parquet(scratch)
+            srcs = [_parquet_in(scratch)] * N_FILES
+            place = shutil.copyfile
+        else:
+            if scatter:
+                batch_of = F.col(id_col) % N_FILES
+            else:
+                batch_of = (F.col(id_col) * N_FILES / (max_id + 1)).cast("int")
+            # ONE pass: partitionBy writes every batch file in a single job
+            # (the partition column lives in the directory name, not the
+            # file), instead of N filtered re-scans of the fixture.
+            # repartition on the batch column puts each batch in exactly
+            # one task → exactly one file per batch dir.
+            (
+                df.withColumn("__b", batch_of)
+                .repartition("__b")
+                .write.mode("overwrite")
+                .partitionBy("__b")
+                .parquet(scratch)
+            )
+            srcs = []
+            for i in range(N_FILES):
+                bdir = os.path.join(scratch, f"__b={i}")
+                # partitionBy writes no directory for an empty partition
+                # value; a sparse/non-contiguous id could legally produce
+                # one. The oracles reconstruct batch contents from the
+                # batch function, so a silently missing micro-batch must
+                # be loud, not skipped.
+                if not os.path.isdir(bdir):
+                    raise ValueError(
+                        f"staging bucket {i}/{N_FILES} is empty for {key!r}: "
+                        f"the {id_col} distribution left no rows in __b={i}; "
+                        f"the fixture cannot drive {N_FILES} micro-batches"
+                    )
+                srcs.append(_parquet_in(bdir))
+            place = os.rename
+        stage = tempfile.mkdtemp(prefix=prefix)
+        for i, src in enumerate(srcs):
+            dst = os.path.join(stage, f"{i:04d}.parquet")
+            place(src, dst)
+            os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    _STAGED[key] = stage
+    return stage
+
+
+def _parquet_in(directory: str) -> str:
+    return os.path.join(
+        directory, next(f for f in os.listdir(directory) if f.endswith(".parquet"))
+    )
+
+
 def stage_events(spark: SparkSession, sf_dir: str, order: str = "time") -> str:
     """Write the events fixture as N_FILES parquet files (mtime-ordered) and
     return the directory. ``ts`` is cast to TIMESTAMP (session tz is pinned
@@ -58,60 +126,7 @@ def stage_events(spark: SparkSession, sf_dir: str, order: str = "time") -> str:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    max_id = ev.agg(F.max("event_id")).first()[0]
-    stage = tempfile.mkdtemp(prefix=f"events_stream_{order}_")
-    if max_id is None:
-        # Empty events table: a fresh topic, not an error. Stage N_FILES
-        # schema-bearing empty parquet files so every downstream streaming
-        # op replays its micro-batches empty (the zero-row-batch path a
-        # live deployment hits on day one) instead of dying on arithmetic
-        # against a missing max.
-        import shutil
-
-        tmpd = tempfile.mkdtemp()
-        ev.limit(0).coalesce(1).write.mode("overwrite").parquet(tmpd)
-        src = next(f for f in os.listdir(tmpd) if f.endswith(".parquet"))
-        for i in range(N_FILES):
-            dst = os.path.join(stage, f"{i:04d}.parquet")
-            shutil.copyfile(os.path.join(tmpd, src), dst)
-            os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-        _STAGED[key] = stage
-        return stage
-    if order == "scatter":
-        batch_of = F.col("event_id") % N_FILES
-    else:
-        batch_of = (F.col("event_id") * N_FILES / (max_id + 1)).cast("int")
-    # ONE pass: partitionBy writes every batch file in a single job (the
-    # partition column lives in the directory name, not the file), instead
-    # of N filtered re-scans of the fixture. repartition on the batch column
-    # puts each batch in exactly one task → exactly one file per batch dir.
-    tmpd = tempfile.mkdtemp()
-    (
-        ev.withColumn("__b", batch_of)
-        .repartition("__b")
-        .write.mode("overwrite")
-        .partitionBy("__b")
-        .parquet(tmpd)
-    )
-    for i in range(N_FILES):
-        bdir = os.path.join(tmpd, f"__b={i}")
-        # partitionBy writes no directory for an empty partition value;
-        # sparse/non-contiguous event_id could legally produce one. The
-        # oracles reconstruct batch contents from the batch_of function, so
-        # a silently missing micro-batch must be loud, not skipped.
-        if not os.path.isdir(bdir):
-            raise ValueError(
-                f"staging bucket {i}/{N_FILES} is empty for {sf_dir!r} "
-                f"(order={order!r}): event_id distribution left no rows in "
-                f"__b={i}; the fixture cannot drive {N_FILES} micro-batches"
-            )
-        part = next(f for f in os.listdir(bdir) if f.endswith(".parquet"))
-        dst = os.path.join(stage, f"{i:04d}.parquet")
-        os.rename(os.path.join(bdir, part), dst)
-        # FileStreamSource orders by modification time; pin it.
-        os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-    _STAGED[key] = stage
-    return stage
+    return _stage(key, ev, "event_id", f"events_stream_{order}_", order == "scatter")
 
 
 def read_events_stream(
@@ -162,44 +177,7 @@ def stage_documents(spark: SparkSession, sf_dir: str) -> str:
     key = (sf_dir, "__documents__")
     if key in _STAGED:
         return _STAGED[key]
-    docs = load_table(spark, sf_dir, "documents")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    stage = tempfile.mkdtemp(prefix="docs_stream_")
-    if max_id is None:
-        import shutil
-
-        tmpd = tempfile.mkdtemp()
-        docs.limit(0).coalesce(1).write.mode("overwrite").parquet(tmpd)
-        src = next(f for f in os.listdir(tmpd) if f.endswith(".parquet"))
-        for i in range(N_FILES):
-            dst = os.path.join(stage, f"{i:04d}.parquet")
-            shutil.copyfile(os.path.join(tmpd, src), dst)
-            os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-        _STAGED[key] = stage
-        return stage
-    batch_of = (F.col("doc_id") * N_FILES / (max_id + 1)).cast("int")
-    tmpd = tempfile.mkdtemp()
-    (
-        docs.withColumn("__b", batch_of)
-        .repartition("__b")
-        .write.mode("overwrite")
-        .partitionBy("__b")
-        .parquet(tmpd)
-    )
-    for i in range(N_FILES):
-        bdir = os.path.join(tmpd, f"__b={i}")
-        if not os.path.isdir(bdir):
-            raise ValueError(
-                f"document staging bucket {i}/{N_FILES} is empty for "
-                f"{sf_dir!r}; the fixture cannot drive {N_FILES} ingest "
-                "batches"
-            )
-        part = next(f for f in os.listdir(bdir) if f.endswith(".parquet"))
-        dst = os.path.join(stage, f"{i:04d}.parquet")
-        os.rename(os.path.join(bdir, part), dst)
-        os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-    _STAGED[key] = stage
-    return stage
+    return _stage(key, load_table(spark, sf_dir, "documents"), "doc_id", "docs_stream_")
 
 
 def read_documents_stream(

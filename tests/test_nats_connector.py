@@ -280,10 +280,10 @@ def test_reconnect_attempts_exhausted():
 
 
 def test_reconnect_mid_frame_resynchronizes():
-    """A socket drop after the MSG header but mid-payload (ADVICE r4): the
-    parser must NOT consume the fresh connection's protocol bytes as the
-    old payload's remainder. The torn frame is dropped (at-most-once, like
-    the reference) and the next complete frame is delivered intact."""
+    """A socket drop after the MSG header but mid-payload: the parser must
+    NOT consume the fresh connection's protocol bytes as the old payload's
+    remainder. The torn frame is dropped (at-most-once, like the
+    reference) and the next complete frame is delivered intact."""
     server = socket.create_server(("127.0.0.1", 0))
     port = server.getsockname()[1]
 
@@ -317,8 +317,7 @@ def test_reconnect_mid_frame_resynchronizes():
 
 def test_send_retry_failure_is_conn_closed(broker):
     """If the freshly redialed socket dies too, _send must surface the
-    documented NatsError(CONN_CLOSED) contract, not a raw OSError
-    (ADVICE r4)."""
+    documented NatsError(CONN_CLOSED) contract, not a raw OSError."""
     c = NatsClient(f"nats://127.0.0.1:{broker.port}")
 
     class DeadSock:
@@ -356,10 +355,9 @@ def test_publish_validation(broker):
 
 # -- durable-offset replay (the JetStream-shaped path) -------------------------
 def test_spool_durable_offset_resume(spark, tmp_path):
-    """The spool reader's offset ({"seg": name, "pos": byte-offset}) is a
-    durable cursor — the in-container stand-in for a JetStream consumer
-    sequence. A second
-    streaming query restarted from the SAME checkpoint must resume after
+    """The spool reader's offsets (per partition, a frontier plus a drained
+    set) are durable — the in-container stand-in for a JetStream consumer
+    sequence. A second streaming query restarted from the SAME checkpoint must resume after
     the recorded offset: no duplicates of drained messages, no loss of new
     ones. (Core NATS itself is at-most-once with no replay, matching the
     reference lib/nats.js:175-179; this is the exactly-once upgrade path
@@ -403,7 +401,7 @@ def test_spool_durable_offset_resume(spark, tmp_path):
     assert sorted(bytes(r.payload).decode() for r in second) == [f"m{i}" for i in range(8)]
 
 
-# -- partitioned (executor-parallel, JetStream-shaped) reader ------------------
+# -- the executor-parallel (JetStream-shaped) reader --------------------------
 def _pub_range(spool, lo, hi):
     from node_cdc_nats_spark.sources.nats import spool_publish
 
@@ -442,9 +440,9 @@ def test_partitioned_reader_covers_all_messages(spark, tmp_path):
 
 
 def test_partitioned_reader_checkpoint_resume(spark, tmp_path):
-    """The per-partition cursors ({pid: last-filename}) are durable: a
-    restart from the same checkpoint drains only messages past each
-    partition's cursor — the JetStream durable-consumer contract."""
+    """The per-partition offsets are durable: a restart from the same
+    checkpoint drains only segments each partition has not drained — the
+    JetStream durable-consumer contract."""
     from node_cdc_nats_spark.sources.nats import register_nats_source
 
     register_nats_source(spark)
@@ -478,11 +476,11 @@ def test_partitioned_reader_checkpoint_resume(spark, tmp_path):
 
 
 def test_partitioned_reader_crash_mid_run_resumes_exactly_once(spark, tmp_path):
-    """r4 verdict task 3: kill the stream MID-RUN — not at a clean
-    availableNow boundary — while a publisher is still appending, then
-    restart from the same checkpoint. The durable per-partition cursors
-    (+ the file sink's transactional batch log) must deliver every message
-    exactly once: no loss, no duplication. The core-NATS TCP path stays
+    """Kill the stream MID-RUN — not at a clean availableNow boundary —
+    while a publisher is still appending, then restart from the same
+    checkpoint. The durable per-partition offsets (+ the file sink's
+    transactional batch log) must deliver every message exactly once: no
+    loss, no duplication. The core-NATS TCP path stays
     at-most-once as in the reference (lib/nats.js:163-183); this durable
     replay is the JetStream-shaped spool path only."""
     from node_cdc_nats_spark.sources.nats import register_nats_source
@@ -537,7 +535,6 @@ def test_partitioned_offsets_are_per_partition():
     """Unit-level: latestOffset buckets segment names by crc32 % N into
     drained-set offsets (frontier + exception list) and partitions() plans
     work only for partitions with undrained segments."""
-    import os
     import zlib
 
     from node_cdc_nats_spark.sources.nats import NatsCdcDataSource, spool_publish
@@ -558,10 +555,6 @@ def test_partitioned_offsets_are_per_partition():
         # exceptions
         assert last["seg"] == max(bucket, default="")
         assert last["drained"] == []
-        if bucket:
-            assert last["pos"] == os.path.getsize(
-                os.path.join(spool, last["seg"])
-            )
     parts = reader.partitions(start, end)
     planned = {p.value[0]: sorted(p.value[1]) for p in parts}
     assert set(planned) == {
@@ -576,11 +569,11 @@ def test_partitioned_offsets_are_per_partition():
 
 
 def test_out_of_order_rename_is_not_lost():
-    """ADVICE r9 (high): a writer task with a LOWER segment name renaming
-    into place AFTER a higher-named sibling must not be skipped. The
-    reader's frontier is gated below the pending ``.tmp`` intent, the
-    higher segment rides the ``drained`` exception list, and the late
-    rename is planned exactly once in a later batch."""
+    """A writer task with a LOWER segment name renaming into place AFTER a
+    higher-named sibling must not be skipped. The reader's frontier is
+    gated below the pending ``.tmp`` intent, the higher segment rides the
+    ``drained`` exception list, and the late rename is planned exactly
+    once in a later batch."""
     import zlib
 
     from node_cdc_nats_spark.sources.nats import (
@@ -635,72 +628,10 @@ def test_out_of_order_rename_is_not_lost():
     assert reader.partitions(end2, reader.latestOffset()) == []
 
 
-def test_simple_reader_out_of_order_rename_is_not_lost(tmp_path):
-    """Same race through the driver-side SimpleDataSourceStreamReader:
-    the r9 ``f >= seg`` filter lost a lower-named late rename."""
-    from node_cdc_nats_spark.sources.nats import (
-        NatsCdcDataSource,
-        frame_messages,
-    )
-
-    spool = tmp_path / "spool"
-    spool.mkdir()
-
-    def seg_bytes(payloads):
-        return frame_messages(
-            [encode_cdcmsg("p", "c", "", "", "", 0, False, p) for p in payloads]
-        )
-
-    (spool / ".000000000001-a.seg.tmp").write_bytes(seg_bytes([b"late"]))
-    (spool / "000000000002-b.seg").write_bytes(seg_bytes([b"early"]))
-    ds = NatsCdcDataSource(options={"spool": str(spool)})
-    reader = ds.simpleStreamReader(None)
-    rows1, off1 = reader.read(reader.initialOffset())
-    assert [bytes(r[7]) for r in rows1] == [b"early"]
-    # frontier gated below the pending intent; the drained sibling rides
-    # the exception list
-    assert off1["seg"] == ""
-    assert off1["drained"] == ["000000000002-b.seg"]
-    (spool / ".000000000001-a.seg.tmp").rename(spool / "000000000001-a.seg")
-    rows2, off2 = reader.read(off1)
-    assert [bytes(r[7]) for r in rows2] == [b"late"]
-    assert off2["seg"] == "000000000002-b.seg"
-    assert off2["drained"] == []
-    rows3, _ = reader.read(off2)
-    assert list(rows3) == []
-
-
-def test_simple_reader_cursor_lands_on_torn_frame(tmp_path):
-    """A torn tail (a writer that bypassed the rename protocol) stops the
-    driver-side drain: the offset parks exactly at the torn frame's start,
-    later segments wait, and once the frame is whole the next read resumes
-    there, so nothing is lost or read twice."""
-    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource, frame_messages
-
-    spool = tmp_path / "spool"
-    spool.mkdir()
-    envs = [encode_cdcmsg("p", "c", "", "", "", 0, False, f"m{i}".encode()) for i in range(5)]
-    whole = frame_messages(envs[:4])
-    torn_at = len(frame_messages(envs[:3]))
-    (spool / "000000000001-a.seg").write_bytes(whole[: torn_at + 6])
-    (spool / "000000000002-b.seg").write_bytes(frame_messages(envs[4:]))
-    reader = NatsCdcDataSource(options={"spool": str(spool)}).simpleStreamReader(None)
-    rows1, off1 = reader.read(reader.initialOffset())
-    assert [bytes(r[7]) for r in rows1] == [b"m0", b"m1", b"m2"]
-    assert off1 == {"seg": "000000000001-a.seg", "pos": torn_at, "drained": []}
-    (spool / "000000000001-a.seg").write_bytes(whole)
-    rows2, off2 = reader.read(off1)
-    assert [bytes(r[7]) for r in rows2] == [b"m3", b"m4"]
-    assert off2["seg"] == "000000000002-b.seg"
-    rows3, _ = reader.read(off2)
-    assert list(rows3) == []
-
-
 def test_segment_frames_and_byte_offset_resume(tmp_path):
     """The segment frame format directly: one segment holding many
-    length-prefixed envelopes, read in full, then re-read from a mid-file
-    byte offset — the (segment, byte-offset) cursor contract the streaming
-    readers rely on."""
+    length-prefixed envelopes reads back in full, with each frame's start
+    position, and a torn tail stops cleanly at the last complete frame."""
     import os
 
     from node_cdc_nats_spark.sources.nats import frame_messages, read_frames
@@ -715,15 +646,6 @@ def test_segment_frames_and_byte_offset_resume(tmp_path):
     assert [decode_cdcmsg(b)["payload"] for _, b in frames] == [
         f"m{i}".encode() for i in range(7)
     ]
-    # resume from the 3rd frame's start position: exactly frames 2..6
-    resume_pos = frames[2][0]
-    tail = list(read_frames(str(seg), from_pos=resume_pos))
-    assert [decode_cdcmsg(b)["payload"] for _, b in tail] == [
-        f"m{i}".encode() for i in range(2, 7)
-    ]
-    # an upto bound on a frame boundary excludes the boundary frame
-    mid = list(read_frames(str(seg), from_pos=0, upto_pos=frames[2][0]))
-    assert len(mid) == 2
     # a torn tail (truncated mid-frame) stops cleanly at the last complete
     # frame instead of misparsing
     data = seg.read_bytes()
@@ -733,10 +655,10 @@ def test_segment_frames_and_byte_offset_resume(tmp_path):
     assert os.path.getsize(str(seg)) == frames[-1][0] + 4 + len(envs[-1])
 
 
-def test_simple_reader_drains_multi_frame_segment(spark, tmp_path):
+def test_reader_drains_multi_frame_segment(spark, tmp_path):
     """A batch-writer-shaped segment (many frames in ONE file) drains
-    completely through the driver-side reader, and the recorded cursor
-    points at the segment end so a restart replays nothing."""
+    completely through the reader with default options, and the recorded
+    offsets mark it drained so a restart replays nothing."""
     from node_cdc_nats_spark.sources.nats import frame_messages, register_nats_source
 
     register_nats_source(spark)
@@ -765,8 +687,55 @@ def test_simple_reader_drains_multi_frame_segment(spark, tmp_path):
         )
 
     assert drain() == sorted(f"m{i}" for i in range(9))
-    # restart on the same checkpoint: cursor at segment end → no duplicates
+    # restart on the same checkpoint: both segments drained → no duplicates
     assert drain() == sorted(f"m{i}" for i in range(9))
+
+
+def test_stream_reader_defaults_to_four_partitions():
+    """With no ``partitions`` option the source still gets the
+    executor-parallel reader, with 4 partitions."""
+    from pyspark.sql.datasource import DataSourceStreamReader
+
+    from node_cdc_nats_spark.sources.nats import NatsCdcDataSource
+
+    reader = NatsCdcDataSource(options={"spool": "unused"}).streamReader(None)
+    assert isinstance(reader, DataSourceStreamReader)
+    assert reader.n == 4
+    assert set(reader.initialOffset()["last"]) == {"0", "1", "2", "3"}
+
+
+@pytest.mark.parametrize("options", [{}, {"partitions": "3"}], ids=["default", "partitions3"])
+def test_uncommitted_batch_replays_exactly_once(spark, tmp_path, options):
+    """A crash between the sink write and the commit leaves a batch whose
+    offsets are logged but not committed. The query restarted on the same
+    checkpoint must plan that batch again from the same segments, so the
+    file sink holds every message exactly once."""
+    from node_cdc_nats_spark.sources.nats import register_nats_source
+    from tests.conftest import uncommit_last_batch
+
+    register_nats_source(spark)
+    spool, ckpt, out = (str(tmp_path / d) for d in ("spool", "ckpt", "out"))
+    _pub_range(spool, 0, 6)
+
+    def drain():
+        q = (
+            spark.readStream.format("nats_cdc")
+            .option("spool", spool)
+            .options(**options)
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sorted(bytes(r.payload).decode() for r in spark.read.parquet(out).collect())
+
+    expected = [f"m{i}" for i in range(6)]
+    assert drain() == expected
+    uncommit_last_batch(ckpt, out)
+    assert drain() == expected
 
 
 @pytest.fixture()

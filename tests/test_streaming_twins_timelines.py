@@ -522,3 +522,42 @@ def test_streaming_ops_remove_their_checkpoints(spark, monkeypatch, name):
     ckpts = [p for p in made if os.path.basename(p).startswith("ckpt_")]
     assert len(ckpts) == 1, made
     assert [p for p in ckpts if os.path.exists(p)] == []
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["fixture", "empty"])
+def test_staging_leaves_only_the_stage_directories(spark, monkeypatch, tmp_path, empty):
+    """Staging the events and documents fixtures keeps exactly the two
+    returned stage directories: the partitionBy scratch directory, and the
+    empty-table branch's copy source, are removed."""
+    import os
+    import tempfile
+
+    import duckdb
+
+    from node_cdc_nats_spark.streaming import source
+    from tests.conftest import SF_DIR
+
+    sf_dir = SF_DIR
+    if empty:
+        sf_dir = str(tmp_path)
+        con = duckdb.connect()
+        for t in ("events", "documents"):
+            con.execute(
+                f"COPY (SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet') WHERE 1=0)"
+                f" TO '{sf_dir}/{t}.parquet' (FORMAT PARQUET)"
+            )
+        con.close()
+    made = []
+    real = tempfile.mkdtemp
+
+    def recording(*args, **kwargs):
+        path = real(*args, **kwargs)
+        made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording)
+    monkeypatch.setattr(source, "_STAGED", {})
+    stages = [source.stage_events(spark, sf_dir), source.stage_documents(spark, sf_dir)]
+    assert [p for p in made if os.path.exists(p)] == stages
+    for stage in stages:
+        assert sorted(os.listdir(stage)) == [f"{i:04d}.parquet" for i in range(source.N_FILES)]
