@@ -29,6 +29,8 @@ import sys
 from pyspark import cloudpickle
 from pyspark.sql import Column, functions as F
 
+from .zipcache import gate_zip_rereads
+
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # The CDCMsg fields in field-number order (field k is FIELDS[k - 1]) and
@@ -250,6 +252,7 @@ def decode_col(col: Column) -> Column:
 
     @F.pandas_udf(DECODED_SCHEMA)
     def _decode(series):
+        gate_zip_rereads()
         import pandas as pd
 
         return pd.DataFrame([decode_fields(b) for b in series], columns=FIELDS)
@@ -263,6 +266,7 @@ def encode_col(struct: Column) -> Column:
 
     @F.pandas_udf("binary")
     def _encode(pdf):
+        gate_zip_rereads()
         import pandas as pd
 
         cols = {}

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from .session import tune_session
+from .session import size_shuffle_partitions, tune_session
 
 # Nanosecond→microsecond truncation then anchor at the NTZ epoch: matches
 # DuckDB's CAST(TIMESTAMP_NS AS TIMESTAMP) truncation semantics exactly.
@@ -49,6 +49,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         tune_session(spark)
         return _normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    size_shuffle_partitions(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

@@ -50,6 +50,20 @@ The DataSource classes run on Spark's Python workers, which do not have
 this package on ``sys.path``. Like ``functions/cdcmsg.py``, whose codec
 they call, this module is registered with cloudpickle to be pickled by
 value, so the classes and helpers defined here ship inside the task.
+
+Every method Spark runs in a Python process of its own installs
+``functions/zipcache.gate_zip_rereads`` first: the reader's ``read`` and
+the writer's ``write`` on the UDF workers, the source's constructor in the
+write planner Spark runs every batch, and ``streamReader``/
+``streamWriter`` in the read planner and the sink's commit runner. Those
+processes are reused, and each new task's ``setup_spark_files`` calls
+``importlib.invalidate_caches()``, which on Python 3.11 made every
+zipimporter on the worker path (16 of them, over ``pyspark.zip``, the py4j
+zip and the spark-core jar) re-read its archive's directory: 200-330 ms
+before each task's own code ran. With the gate an unchanged archive is
+not re-read, and the router's trigger p50 at 1000 msg/s fell from about
+1.5 s to about 0.4 s on 4 cores. No option selects it; the query shape
+and the wire bytes are unchanged.
 """
 
 from __future__ import annotations
@@ -76,6 +90,7 @@ from ..functions.cdcmsg import (
     decoded_arrow_schema,
     encode_columns,
 )
+from ..functions.zipcache import gate_zip_rereads
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -471,6 +486,7 @@ class NatsCdcStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition):
+        gate_zip_rereads()
         pid, names = partition.value
         if not self.spool or not os.path.isdir(self.spool):
             return
@@ -524,6 +540,7 @@ class NatsCdcStreamWriter(DataSourceStreamArrowWriter):
         self.publisher = options.get("publisher", "nms")
 
     def write(self, iterator):
+        gate_zip_rereads()
         if not self.spool:
             # TCP publish path: one connection per partition, publish to
             # the TRANSPORT topic (the reference quirk: lib/nats.js:175).
@@ -585,6 +602,13 @@ class NatsCdcStreamWriter(DataSourceStreamArrowWriter):
 
 
 class NatsCdcDataSource(DataSource):
+    # DataSource asks that __init__ not be overridden; this one only adds
+    # the zip re-read gate (see the module docstring) for the write
+    # planner, which constructs the source every batch.
+    def __init__(self, options):
+        gate_zip_rereads()
+        super().__init__(options)
+
     @classmethod
     def name(cls):
         return "nats_cdc"
@@ -593,9 +617,11 @@ class NatsCdcDataSource(DataSource):
         return DECODED_SCHEMA
 
     def streamReader(self, schema):
+        gate_zip_rereads()
         return NatsCdcStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite):
+        gate_zip_rereads()
         return NatsCdcStreamWriter(self.options)
 
 

@@ -776,6 +776,71 @@ def test_sink_varint_gate_matches_scalar_encoder(tmp_path, stub_task):
     ]
 
 
+ENTRY_POINTS_PROGRAM = r"""
+import json, os, sys, zipimport
+sys.path.insert(0, {repo!r})
+import pyarrow as pa
+import pyspark
+from pyspark.sql.datasource import InputPartition
+from node_cdc_nats_spark.sources.nats import NatsCdcDataSource
+
+class Task:  # the stub_task fixture's task context, in this process
+    @staticmethod
+    def taskAttemptId():
+        return 7
+
+pyspark.TaskContext.get = staticmethod(lambda: Task)
+stock = zipimport.zipimporter.invalidate_caches
+gated = {{}}
+
+def after(name, step):
+    zipimport.zipimporter.invalidate_caches = stock
+    result = step()
+    gated[name] = getattr(zipimport.zipimporter.invalidate_caches, "stat_gated", False)
+    return result
+
+spool = sys.argv[1]
+batch = pa.RecordBatch.from_arrays(
+    [pa.array(["a/1", "a/2"]), pa.array([b"x", b"y"])], names=["channel", "payload"]
+)
+ds = after("__init__", lambda: NatsCdcDataSource(options={{"spool": spool}}))
+writer = after("streamWriter", lambda: ds.streamWriter(None, False))
+after("write", lambda: writer.write(iter([batch])))
+reader = after("streamReader", lambda: ds.streamReader(None))
+(seg,) = os.listdir(spool)
+rows = after("read", lambda: list(reader.read(InputPartition((0, (seg,))))))
+gated["rows"] = sum(b.num_rows for b in rows)
+print(json.dumps(gated))
+"""
+
+
+def test_every_entry_point_gates_zip_rereads(tmp_path):
+    """Each ``nats_cdc`` method that Spark runs in a Python process of its
+    own installs the zip re-read gate (``functions/zipcache.py``): the
+    source's constructor (the write planner), ``streamWriter`` and
+    ``streamReader`` (the commit runner and the read planner unpickle the
+    source), and the writer's ``write`` and the reader's ``read`` (the
+    workers). The gate is removed before each step, so every step is
+    checked on its own. Runs in a fresh interpreter so the importers of
+    the pytest process stay stock."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spool = tmp_path / "spool"
+    proc = subprocess.run(
+        [sys.executable, "-c", ENTRY_POINTS_PROGRAM.format(repo=repo), str(spool)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.splitlines()[-1]) == {
+        "__init__": True, "streamWriter": True, "write": True,
+        "streamReader": True, "read": True, "rows": 2,
+    }
+
+
 # -- TCP sink ------------------------------------------------------------------
 SINK_ROWS = [
     ("nms", "sensor/1/temp", "json", "http", "", 1, True, b'{"v":42}'),
