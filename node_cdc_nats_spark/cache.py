@@ -1,13 +1,14 @@
-"""Session-scoped lifecycle for persisted intermediates (cache ownership).
+"""Session-scoped lifecycle for what registered queries leave behind:
+persisted intermediates, and the scratch directories of bounded fixture runs.
 
 Several registered queries persist a multi-consumer intermediate (a vocab
 census, a (doc, token-bucket) pair table, a distinct (user, day) set, an
 LSH candidate set) because Spark's exchange reuse does not fire across
 differing parents — the persist is what collapses N corpus scans into one,
 with measured wins recorded in SCALING.md. The persist itself is correct;
-what was missing (r7 verdict item 2) is the release: a long-lived session
-running many registered queries accumulated cached relations until executor
-storage evicted them.
+what it also needs is the release: a long-lived session running many
+registered queries would otherwise accumulate cached relations until
+executor storage evicted them.
 
 The contract:
 
@@ -23,7 +24,7 @@ The contract:
   recomputes (slower, never wrong), so a harness that forgets to call it
   degrades to storage-evicted caches, never to incorrect results.
 
-Scoping (ADVICE r8): the ledger is a ``WeakKeyDictionary`` keyed by
+Scoping: the ledger is a ``WeakKeyDictionary`` keyed by
 SparkSession, so (a) a session's handles die with the session instead of
 pinning py4j objects process-wide, and (b) ``release_persisted`` can be
 scoped to one session. The bare ``release_persisted()`` call drains EVERY
@@ -42,12 +43,23 @@ an unpersist would not defeat the cache is after a blocking action the
 query does not own. A release-at-query-entry hook was also rejected:
 composed queries (``embed_recall_at_k`` calls ``sim_topk`` and
 ``ann_lsh_topk`` directly) would evict their own intermediates mid-build.
+
+Scratch directories: every directory a fixture run writes — a staged copy
+of a fixture (:func:`staged`) or a per-call result table — comes from
+:func:`scratch_dir`, and one ``atexit`` hook removes them all when the
+process that made them exits. Not earlier: a returned frame reads its
+directory lazily, so removing it at :func:`release_persisted` would break
+a caller's later action, and releasing must stay always safe.
 """
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 import weakref
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable, Hashable
 
 from pyspark import StorageLevel
 
@@ -114,3 +126,41 @@ def release_persisted(
 def ledger_size() -> int:
     """Number of persisted handles awaiting release (test/introspection)."""
     return sum(len(b) for b in _LEDGER.values())
+
+
+# (pid, path) of every scratch directory; the pid keeps a forked child from
+# removing its parent's directories at its own exit.
+_SCRATCH: list[tuple[int, str]] = []
+# Staged fixture copies by (prefix, key), one directory each per process.
+_STAGED: dict[tuple[str, Hashable], str] = {}
+
+
+def scratch_dir(prefix: str) -> str:
+    """Make a temporary directory that this process removes at exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append((os.getpid(), path))
+    return path
+
+
+def staged(key: Hashable, prefix: str, write: Callable[[str], None]) -> str:
+    """The directory ``write`` filled for ``(prefix, key)`` in this process:
+    the first call makes a :func:`scratch_dir` and calls ``write(path)``;
+    later calls return the same path. A ``write`` that raises leaves no
+    directory and no cache entry, so the next call tries again."""
+    if (prefix, key) not in _STAGED:
+        path = scratch_dir(prefix)
+        try:
+            write(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        _STAGED[prefix, key] = path
+    return _STAGED[prefix, key]
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    pid = os.getpid()
+    for owner, path in _SCRATCH:
+        if owner == pid:
+            shutil.rmtree(path, ignore_errors=True)

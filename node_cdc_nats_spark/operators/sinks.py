@@ -9,10 +9,12 @@ itself, so a lossy or non-deterministic sink breaks the hash.
 
 from __future__ import annotations
 
-import tempfile
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..cache import scratch_dir, staged
 from ..io import load_table
 from ..registry import register
 from ..streaming.source import read_events_stream, run_to_memory
@@ -48,7 +50,7 @@ def scan_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a streaming query — the unbounded twin of scan_parquet.
     Stateless passthrough, so the result is batching-independent:
     ``single_batch=True`` drains the staged files in one trigger instead
-    of four (r13: each trigger pays ~0.3 s of offset/commit machinery for
+    of four (each trigger pays ~0.3 s of offset/commit machinery for
     identical output; the per-file ops keep their granularity because
     their oracles pin per-batch semantics)."""
     src = read_events_stream(spark, sf_dir, single_batch=True)
@@ -62,7 +64,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousand on a cluster) — the read-back proves schema + values survive,
     including the TIMESTAMP_NTZ event-time column."""
     ev = load_table(spark, sf_dir, "events")
-    out_dir = tempfile.mkdtemp(prefix="sink_parquet_")
+    out_dir = scratch_dir("sink_parquet_")
     ev.write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -73,16 +75,12 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming memory sink (the engine's test/debug sink — S6's
     in-process analog): full passthrough of the event stream. Stateless,
-    so batching-independent — one trigger drains all staged files (r13,
-    same rationale as scan_stream)."""
+    so batching-independent — one trigger drains all staged files (same
+    rationale as scan_stream)."""
     src = read_events_stream(spark, sf_dir, single_batch=True)
     out = run_to_memory(src.select("event_id", "ts", "user_id", "event_type", "value", "props"))
     return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
-
-_CSV_STAGED: dict[str, str] = {}
-_JSON_STAGED: dict[str, str] = {}
-_ORC_STAGED: dict[str, str] = {}
 
 _CUSTOMER_DDL = (
     "c_custkey bigint, c_name string, c_nationkey int, "
@@ -105,15 +103,15 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     production reader always declares its schema). Doubles survive exactly:
     both the writer and Java's shortest-round-trip float formatting parse
     back to the identical bit pattern, so the oracle hash is unchanged."""
-    if sf_dir not in _CSV_STAGED:
-        out = tempfile.mkdtemp(prefix="scan_csv_")
-        load_table(spark, sf_dir, "customer").write.mode("overwrite").option(
-            "header", "true"
-        ).csv(out)
-        _CSV_STAGED[sf_dir] = out
-    return spark.read.schema(_CUSTOMER_DDL).option("header", "true").csv(
-        _CSV_STAGED[sf_dir]
+    out = staged(
+        sf_dir,
+        "scan_csv_",
+        lambda path: load_table(spark, sf_dir, "customer")
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(path),
     )
+    return spark.read.schema(_CUSTOMER_DDL).option("header", "true").csv(out)
 
 
 @register(
@@ -130,11 +128,12 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema — exercising bigint/double/TIMESTAMP_NTZ/string coercion on the
     read path (the same schema-on-read contract the CDC payload decoder
     uses for contentType='json')."""
-    if sf_dir not in _JSON_STAGED:
-        out = tempfile.mkdtemp(prefix="scan_json_")
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").json(out)
-        _JSON_STAGED[sf_dir] = out
-    return spark.read.schema(_ORDERS_DDL).json(_JSON_STAGED[sf_dir])
+    out = staged(
+        sf_dir,
+        "scan_json_",
+        lambda path: load_table(spark, sf_dir, "orders").write.mode("overwrite").json(path),
+    )
+    return spark.read.schema(_ORDERS_DDL).json(out)
 
 
 @register(
@@ -145,26 +144,21 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC file-format reader (round 5, "File formats" breadth): the part
+    """ORC file-format reader ("File formats" breadth): the part
     fixture round-tripped through a written ORC copy and read back —
     columnar like parquet, so predicate pushdown / column pruning /
     vectorized reads all apply unchanged (Spark's OrcScan reports
     PushedFilters exactly as the parquet scan does). Values are
     bit-preserved (int/double/string), so the parquet-backed oracle hash
     matches without coercion."""
-    if sf_dir not in _ORC_STAGED:
-        out = tempfile.mkdtemp(prefix="scan_orc_")
-        load_table(spark, sf_dir, "part").write.mode("overwrite").orc(out)
-        _ORC_STAGED[sf_dir] = out
-    return spark.read.orc(_ORC_STAGED[sf_dir]).select(
+    out = staged(
+        sf_dir,
+        "scan_orc_",
+        lambda path: load_table(spark, sf_dir, "part").write.mode("overwrite").orc(path),
+    )
+    return spark.read.orc(out).select(
         "p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"
     )
-
-
-_PARTITIONED: dict[str, str] = {}
-# One-time staged layouts for the schema-evolution / compaction readers
-# (same once-per-(process, sf) pattern as _PARTITIONED).
-_STAGED_LAYOUTS: dict[str, str] = {}
 
 
 @register(
@@ -183,25 +177,16 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to 3 of ~30 daily directories, so the scan cost tracks the
     queried window, not the archive size. The partitioned copy is staged
     once per process (it is the fixture's stand-in for the real archive)."""
-    key = sf_dir
-    if key not in _PARTITIONED:
-        ev = load_table(spark, sf_dir, "events")
-        out_dir = tempfile.mkdtemp(prefix="events_by_date_")
-        (
-            ev.withColumn("event_date", F.to_date("ts"))
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(out_dir)
-        )
-        _PARTITIONED[key] = (
-            out_dir,
-            ev.withColumn("event_date", F.to_date("ts")).schema,
-        )
-    out_dir, schema = _PARTITIONED[key]
+    ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+    out_dir = staged(
+        sf_dir,
+        "events_by_date_",
+        lambda path: ev.write.mode("overwrite").partitionBy("event_date").parquet(path),
+    )
     # Explicit schema: skips the footer-inference listing pass on a real
     # archive, and keeps an archive with zero partition directories (empty
     # source) a well-typed empty scan instead of UNABLE_TO_INFER_SCHEMA.
-    df = spark.read.schema(schema).parquet(out_dir)
+    df = spark.read.schema(ev.schema).parquet(out_dir)
     return (
         df.filter(
             (F.col("event_date") >= F.lit("2024-01-10").cast("date"))
@@ -228,12 +213,11 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides. The oracle reconstructs the same null pattern from the
     row split. Explicit-schema reads stay the default everywhere else —
     mergeSchema costs a footer pass per file and is the exception path."""
-    key = f"schema_evo::{sf_dir}"
-    if key not in _STAGED_LAYOUTS:  # stage once per (process, sf), like _PARTITIONED
+
+    def write(out_dir: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
-        out_dir = tempfile.mkdtemp(prefix="schema_evo_")
         v1 = ev.filter(F.col("event_id") % 2 != 0)
         v2 = (
             ev.filter(F.col("event_id") % 2 == 0)
@@ -242,8 +226,8 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1.write.mode("overwrite").parquet(f"{out_dir}/part=v1")
         v2.write.mode("overwrite").parquet(f"{out_dir}/part=v2")
-        _STAGED_LAYOUTS[key] = out_dir
-    out_dir = _STAGED_LAYOUTS[key]
+
+    out_dir = staged(sf_dir, "schema_evo_", write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{out_dir}/part=v1", f"{out_dir}/part=v2"
     )
@@ -258,21 +242,20 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job that keeps scan task counts sane — file-count metadata
     asserted in tests/test_semantics (compacted layout must be exactly 4
     files)."""
-    key = f"compacted::{sf_dir}"
-    if key not in _STAGED_LAYOUTS:  # compaction is write-once; later calls re-read
-        ev = load_table(spark, sf_dir, "events")
-        frag_dir = tempfile.mkdtemp(prefix="fragmented_")
-        ev.repartition(64).write.mode("overwrite").parquet(frag_dir)
-        compact_dir = tempfile.mkdtemp(prefix="compacted_")
-        spark.read.parquet(frag_dir).repartition(4).write.mode("overwrite").parquet(
-            compact_dir
+
+    def compact(path: str) -> None:
+        # The fragmented layout is only the compaction's input: it goes as
+        # soon as the compacted copy is written.
+        frag = os.path.join(path, "fragmented")
+        load_table(spark, sf_dir, "events").repartition(64).write.parquet(frag)
+        spark.read.parquet(frag).repartition(4).write.parquet(
+            os.path.join(path, "compacted")
         )
-        _STAGED_LAYOUTS[key] = compact_dir
-    out = spark.read.parquet(_STAGED_LAYOUTS[key])
+        shutil.rmtree(frag)
+
+    stage = staged(sf_dir, "compacted_", compact)
+    out = spark.read.parquet(os.path.join(stage, "compacted"))
     return out.select("event_id", "ts", "user_id", "event_type", "value", "props")
-
-
-_BINARY_STAGED: dict[str, str] = {}
 
 
 @register(
@@ -297,13 +280,14 @@ def scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxPartitionBytes applies), and the projection is map-side; nothing
     shuffles. The staging is fixture scaffolding, not the operator — a
     production bucket is written by the upstream asset store — and it
-    too is executor-side (r7): `foreachPartition` writes each task's
+    too is executor-side: `foreachPartition` writes each task's
     files in parallel where the data sits, so no SF-proportional rows
     ever cross to the driver (on a real cluster the write target is the
     shared object store; on local[32] the shared tmpdir stands in). The
     content column is dropped before return (the driver canonicalizer
     requires hashable scalar cells; md5 carries the content identity)."""
-    if sf_dir not in _BINARY_STAGED:
+
+    def write(out: str) -> None:
         # Local-mode-only staging: executors must share the driver
         # filesystem for the binaryFile read below to see these writes.
         # A non-local master needs a shared-storage staging path instead
@@ -315,7 +299,6 @@ def scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"(got {master!r}); point the staging path at shared "
                 "storage to run this fixture on a cluster"
             )
-        out = tempfile.mkdtemp(prefix="scan_binary_")
 
         def _write_partition(rows) -> None:
             import os as _os
@@ -330,8 +313,8 @@ def scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text")
             .foreachPartition(_write_partition)
         )
-        _BINARY_STAGED[sf_dir] = out
-    df = spark.read.format("binaryFile").load(_BINARY_STAGED[sf_dir])
+
+    df = spark.read.format("binaryFile").load(staged(sf_dir, "scan_binary_", write))
     doc_id = F.regexp_extract(
         F.element_at(F.split(F.col("path"), "/"), -1), r"^(\d+)\.bin$", 1
     ).cast("long")

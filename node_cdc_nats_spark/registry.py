@@ -56,7 +56,9 @@ _VERIFY_HEAD = (
     "stream_stream_join", "stream_stream_left_join", "stream_downsample_ohlc",
     "stream_rpc_state", "stream_topk", "stream_upsert", "stream_scd2",
     "stream_tumble", "stream_slide", "stream_session", "stream_watermark",
-    "stream_dedup", "scan_stream", "sink_memory",
+    "stream_dedup", "scan_stream", "sink_memory", "scan_csv", "scan_json",
+    "scan_orc", "scan_partition_pruned", "scan_schema_evolution",
+    "sink_compacted", "scan_binary", "sink_parquet",
 )
 
 # The driver's evidence files sit at the repository root, next to the package.

@@ -1,7 +1,7 @@
 """Continuous incremental-ingest dedup — the streaming twin of the
 ``dedup_incremental`` + ``dedup_bloom_prefilter`` batch pair
 (operators/dedup.py), closing the one LLM-pipeline family whose continuous
-form was unrepresented (r9 verdict item 6).
+form was otherwise unrepresented.
 
 The production shape this reproduces (Dolma/C4-style ingest): corpus
 shipments arrive as a stream; each shipment must be deduplicated against
@@ -40,18 +40,13 @@ same story as the batch pair, now load-bearing across micro-batches.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from ..cache import scratch_dir
 from ..operators.dedup import BLOOM_M, _spark_hex16
 from ..registry import register
-from .source import (
-    STREAM_SHUFFLE_PARTITIONS,
-    _ckpt_dir,
-    read_documents_stream,
-)
+from .source import drain, read_documents_stream
 
 
 @register(
@@ -69,33 +64,32 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally maintained Bloom filter, admitting exactly the global
     keep-first-by-doc_id set.
 
-    Floor decomposition (measured at sf0.1, r11; updated r14): each round
-    is TWO Spark jobs — the screened-batch localCheckpoint and a
-    parquet-append commit whose ``observe`` metrics carry the Bloom
-    filter update as a side product (the r10 readback job is gone;
-    obs.get ≈ 0.05 s). r11 measured round 2's admit job at ~2.0 s and
-    attributed it to the two-branch union; r14 pinned the cost precisely:
-    each branch re-executed the md5 aggregate and the three bitmap
-    probes, and AQE serialized the duplicated stages (bare agg 0.31 s,
-    union survivors 1.77 s at sf0.1). Materializing the screened batch
-    once (per-shipment sized) cut the round-2 admit path 2.06 → 1.34 s
+    Floor decomposition (measured at sf0.1): each round is TWO Spark
+    jobs — the screened-batch localCheckpoint and a parquet-append commit
+    whose ``observe`` metrics carry the Bloom filter update as a side
+    product (no separate readback job; obs.get ≈ 0.05 s). Round 2's
+    admit job once took ~2.0 s because each branch of the two-branch
+    union re-executed the md5 aggregate and the three bitmap probes, and
+    AQE serialized the duplicated stages (bare agg 0.31 s, union
+    survivors 1.77 s at sf0.1). Materializing the screened batch once
+    (per-shipment sized) cut the round-2 admit path 2.06 → 1.34 s
     including the added checkpoint job. The union SHAPE stays: a
     single-pass left-join+filter rewrite measured faster still at
-    fixture scale and remains REJECTED because it routes every
-    Bloom-negative through the kept join — at corpus scale the union
-    shape is what lets the mostly-novel majority skip the second
-    exchange into the kept table's layout entirely, which is the
-    screen's purpose. Swapping the 64 KB bitmap literal for broadcast
-    data (1-row cross join) was also A/B'd in r11: no win. Everything
-    remaining is fixed per-round cost that amortizes on a long-lived
-    ingest; no further headroom without giving up the scale shape."""
+    fixture scale and is REJECTED because it routes every Bloom-negative
+    through the kept join — at corpus scale the union shape is what lets
+    the mostly-novel majority skip the second exchange into the kept
+    table's layout entirely, which is the screen's purpose. Swapping the
+    64 KB bitmap literal for broadcast data (1-row cross join) was also
+    A/B'd: no win. Everything remaining is fixed per-round cost that
+    amortizes on a long-lived ingest; no further headroom without giving
+    up the scale shape."""
     # ONE table serves as both the kept-hash state and the emitted result:
     # what this op admits IS the kept corpus (doc_id, content_hash), so a
     # second copy would double every batch's write for nothing. The table
     # materializes with the first admitted round; until then readers get
     # a well-typed empty frame (a zero-row pre-seed write would cost a
     # full Spark write job just to avoid this two-line branch).
-    kept_dir = tempfile.mkdtemp(prefix="ingest_dedup_kept_")
+    kept_dir = scratch_dir("ingest_dedup_kept_")
     schema = "doc_id bigint, content_hash string"
 
     def read_kept() -> DataFrame:
@@ -132,7 +126,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             == "1"
         )
-        # r14: the screened batch is materialized ONCE (localCheckpoint —
+        # The screened batch is materialized ONCE (localCheckpoint —
         # per-SHIPMENT sized, never corpus-sized) before the two-branch
         # union. Without it each branch re-executed the md5 aggregate and
         # the three 64 KB-literal probes, and AQE serialized the duplicated
@@ -140,8 +134,8 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch at sf0.1): 2.06 → 1.34 s for the admit job including the
         # extra checkpoint job, identical Bloom deltas. The union SHAPE
         # stays: negatives still never touch the kept table's exchange,
-        # which is the screen's scale purpose (the r11-rejected single-pass
-        # left-join rewrite remains rejected).
+        # which is the screen's scale purpose (the single-pass left-join
+        # rewrite stays rejected).
         flagged = b.withColumn(
             "bloom_hit", probe(1) & probe(5) & probe(9)
         ).localCheckpoint(eager=True)
@@ -154,18 +148,17 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(flagged.filter(~F.col("bloom_hit")))
             .select("doc_id", "content_hash")
         )
-        # ONE job per batch, full stop (r10 verdict item 4 — the readback
-        # job is gone): the survivor append carries an ``observe`` with
-        # three ``collect_set`` aggregates (one per Bloom hash offset), so
-        # the filter-update positions fall out of the SAME write action —
-        # Spark's CollectMetrics accumulates them task-side as the rows
-        # stream to the committer, and ``Observation.get`` hands the sets
-        # to the coordinator after the commit. No second scan, no re-run
-        # of the dedup plan (which, post-append, would anti-join the
-        # survivors against themselves and starve the filter). The driver
-        # traffic is bounded exactly as before: each set is DISTINCT
-        # positions in [0, m), so ≤ 3·m values per batch regardless of
-        # shipment size (m = 65536 here; production ships the update as a
+        # ONE write job per batch, no readback job: the survivor append
+        # carries an ``observe`` with three ``collect_set`` aggregates (one
+        # per Bloom hash offset), so the filter-update positions fall out
+        # of the SAME write action — Spark's CollectMetrics accumulates
+        # them task-side as the rows stream to the committer, and
+        # ``Observation.get`` hands the sets to the coordinator after the
+        # commit. No second scan, no re-run of the dedup plan (which,
+        # post-append, would anti-join the survivors against themselves and
+        # starve the filter). The driver traffic is bounded: each set is
+        # DISTINCT positions in [0, m), so ≤ 3·m values per batch regardless
+        # of shipment size (m = 65536 here; production ships the update as a
         # bitmap delta instead of a position list), and incremental —
         # this delta's positions only, so filter-update cost tracks the
         # shipment, never the corpus. coalesce(1): one state-table file
@@ -183,29 +176,14 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_bits.update(got["p2"])
         bloom_bits.update(got["p3"])
 
-    # Same shuffle sizing as run_to_memory: the per-batch jobs move a few
-    # thousand rows, so 32 shuffle tasks per job would be pure scheduling
-    # overhead at fixture scale (a production ingest sizes this to its
-    # shipment volume).
-    ckpt = _ckpt_dir()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            # Two ingest rounds of two shipments each: the cross-round
-            # maintenance path (kept-table anti-join + learned filter) is
-            # exercised exactly the same as with four rounds — keep-first
-            # is monotone in doc_id across and within rounds — at half
-            # the per-trigger machinery cost.
-            read_documents_stream(spark, sf_dir, files_per_trigger=2)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        # The result is the kept table, not the checkpoint.
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # Two ingest rounds of two shipments each: the cross-round maintenance
+    # path (kept-table anti-join + learned filter) is exercised exactly the
+    # same as with four rounds — keep-first is monotone in doc_id across
+    # and within rounds — at half the per-trigger machinery cost. The
+    # drain's shuffle sizing fits the per-batch jobs, which move a few
+    # thousand rows (a production ingest sizes it to its shipment volume).
+    drain(
+        read_documents_stream(spark, sf_dir, files_per_trigger=2),
+        lambda w: w.foreachBatch(ingest),
+    )
     return read_kept()

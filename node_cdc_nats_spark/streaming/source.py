@@ -37,26 +37,34 @@ import itertools
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..cache import staged
 from ..io import load_table
 from ..session import tune_session
 
 N_FILES = 4
-_STAGED: dict[tuple[str, str], str] = {}
 _MEM_SEQ = itertools.count()
 
 
-def _stage(key, df, id_col: str, prefix: str, scatter: bool = False) -> str:
-    """Write ``df`` as N_FILES parquet files, cache the directory under
-    ``key`` and return it. File i holds the rows whose ``id_col`` quartile
-    is i (``scatter``: whose ``id_col % N_FILES`` is i); its mtime is
-    pinned in file order, because FileStreamSource orders by modification
-    time. The write's scratch directory is removed."""
-    max_id = df.agg(F.max(id_col)).first()[0]
-    scratch = tempfile.mkdtemp()
-    try:
+def _stage(
+    sf_dir: str, prefix: str, load: Callable[[], DataFrame], id_col: str, scatter: bool = False
+) -> str:
+    """Write the frame ``load()`` returns as N_FILES parquet files, once per
+    process per ``(prefix, sf_dir)``, and return the directory. File i
+    holds the rows whose ``id_col`` quartile is i (``scatter``: whose
+    ``id_col % N_FILES`` is i); its mtime is pinned in file order, because
+    FileStreamSource orders by modification time."""
+
+    def write(stage: str) -> None:
+        # The write's own output goes to a subdirectory that is removed
+        # once its files are placed, so the stage holds only the N_FILES.
+        scratch = os.path.join(stage, "_write")
+        df = load()
+        max_id = df.agg(F.max(id_col)).first()[0]
         if max_id is None:
             # Empty table: a fresh topic, not an error. Stage N_FILES
             # schema-bearing empty parquet files so every downstream
@@ -93,21 +101,19 @@ def _stage(key, df, id_col: str, prefix: str, scatter: bool = False) -> str:
                 # be loud, not skipped.
                 if not os.path.isdir(bdir):
                     raise ValueError(
-                        f"staging bucket {i}/{N_FILES} is empty for {key!r}: "
+                        f"{prefix} bucket {i}/{N_FILES} is empty for {sf_dir!r}: "
                         f"the {id_col} distribution left no rows in __b={i}; "
                         f"the fixture cannot drive {N_FILES} micro-batches"
                     )
                 srcs.append(_parquet_in(bdir))
             place = os.rename
-        stage = tempfile.mkdtemp(prefix=prefix)
         for i, src in enumerate(srcs):
             dst = os.path.join(stage, f"{i:04d}.parquet")
             place(src, dst)
             os.utime(dst, (1_000_000 + i * 10, 1_000_000 + i * 10))
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    _STAGED[key] = stage
-    return stage
+        shutil.rmtree(scratch)
+
+    return staged(sf_dir, prefix, write)
 
 
 def _parquet_in(directory: str) -> str:
@@ -120,13 +126,15 @@ def stage_events(spark: SparkSession, sf_dir: str, order: str = "time") -> str:
     """Write the events fixture as N_FILES parquet files (mtime-ordered) and
     return the directory. ``ts`` is cast to TIMESTAMP (session tz is pinned
     UTC) because watermarks reject TIMESTAMP_NTZ."""
-    key = (sf_dir, order)
-    if key in _STAGED:
-        return _STAGED[key]
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
+    return _stage(
+        sf_dir,
+        f"events_stream_{order}_",
+        lambda: load_table(spark, sf_dir, "events").withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        ),
+        "event_id",
+        order == "scatter",
     )
-    return _stage(key, ev, "event_id", f"events_stream_{order}_", order == "scatter")
 
 
 def read_events_stream(
@@ -145,7 +153,7 @@ def read_events_stream(
     every micro-batch pays a fixed machinery cost (offset/commit WAL,
     state-store open+snapshot per partition, an Arrow round-trip per state
     group — measured ~0.66 s/trigger for the RPC op's 2-partition bounded
-    runs, r8 profile in streaming/rpc.py), so a stateful op whose
+    runs, profiled in streaming/rpc.py), so a stateful op whose
     semantics need SOME cross-batch carry but not one-file-per-batch
     granularity halves its fixed cost with ``files_per_trigger=2``. A
     production trigger interval is exactly this dial: sized to throughput,
@@ -154,8 +162,8 @@ def read_events_stream(
     # miss: load_table(events) inside stage_events re-pins UTC, but a cache
     # hit skips it, so a session whose timeZone drifted between reads would
     # render the staged instants at a different wall clock than the NTZ
-    # oracle (caught by the r12 perturbation sweep on
-    # stream_retention_cohorts — the other twins don't do event-time
+    # oracle (a timeZone perturbation sweep on stream_retention_cohorts
+    # caught this — the other twins don't do event-time
     # calendar arithmetic, but the contract is engine-wide: session.py
     # pins UTC so event-time semantics are deployment-independent).
     tune_session(spark)
@@ -174,10 +182,9 @@ def stage_documents(spark: SparkSession, sf_dir: str) -> str:
     shipment. Batch assignment is monotone in doc_id, so \"first shipment
     wins\" composes with an intra-batch keep-first-by-doc_id into the
     global keep-first the SQL oracle states."""
-    key = (sf_dir, "__documents__")
-    if key in _STAGED:
-        return _STAGED[key]
-    return _stage(key, load_table(spark, sf_dir, "documents"), "doc_id", "docs_stream_")
+    return _stage(
+        sf_dir, "docs_stream_", lambda: load_table(spark, sf_dir, "documents"), "doc_id"
+    )
 
 
 def read_documents_stream(
@@ -197,7 +204,20 @@ def read_documents_stream(
     )
 
 
-STREAM_SHUFFLE_PARTITIONS = "2"
+# Confs a bounded fixture run sets for its query and restores afterwards.
+# Streaming state partition count is locked into the checkpoint at the
+# first batch and every batch pays per-partition state-store open/commit
+# I/O — so it is sized for the stream's key volume, NOT inherited from the
+# batch engine's CPU-count default (32 stores × N batches of micro-batch
+# overhead dominates at fixture scale; on a production stream size it to
+# peak keys-per-trigger instead). The checkpoint is throwaway, so retaining
+# one batch of state/offset history skips the multi-version snapshot I/O
+# the default (100) pays per commit; restoring it keeps a caller's durable
+# streaming queries' full recovery history.
+_BOUNDED_CONFS = {
+    "spark.sql.shuffle.partitions": "2",
+    "spark.sql.streaming.minBatchesToRetain": "1",
+}
 
 
 def _ckpt_dir() -> str:
@@ -210,52 +230,46 @@ def _ckpt_dir() -> str:
     return tempfile.mkdtemp(prefix="ckpt_", dir=base)
 
 
-def run_to_memory(
-    stream_df: DataFrame, mode: str = "append", with_query: bool = False
-):
-    """Run a streaming DataFrame to completion (Trigger.AvailableNow — all
-    staged files, then one no-data batch so the final watermark advance
-    flushes closeable state) into a memory sink; return the sink table
-    (or ``(table, query)`` with ``with_query=True`` — the terminated
-    query still exposes ``lastProgress``, e.g. the final event-time
-    watermark, which is how streaming ops derive post-run horizons
-    without re-scanning the source).
-
-    Streaming state partition count is locked into the checkpoint at the
-    first batch and every batch pays per-partition state-store open/commit
-    I/O — so it is sized for the stream's key volume, NOT inherited from
-    the batch engine's CPU-count default (32 stores × N batches of
-    micro-batch overhead dominates at fixture scale; on a production stream
-    size it to peak keys-per-trigger instead)."""
+def drain(
+    stream_df: DataFrame, sink: Callable[[DataStreamWriter], DataStreamWriter]
+) -> StreamingQuery:
+    """Run ``stream_df`` to completion into the sink that ``sink`` sets on
+    its writer, and return the terminated query. Trigger.AvailableNow
+    reads every staged file, then runs one no-data batch so the final
+    watermark advance flushes closeable state. The query runs under
+    ``_BOUNDED_CONFS`` on a throwaway checkpoint, which is removed once the
+    query has terminated: the result lives in the sink."""
     spark = stream_df.sparkSession
-    name = f"stream_sink_{os.getpid()}_{next(_MEM_SEQ)}"
+    saved = {k: spark.conf.get(k) for k in _BOUNDED_CONFS}
     ckpt = _ckpt_dir()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # Default "100" if unset — restored either way so a caller's durable
-    # streaming queries keep their full recovery history.
-    old_retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    # Checkpoints are throwaway (one bounded run per query): retaining one
-    # batch of state/offset history skips the multi-version snapshot I/O the
-    # default (100) pays per commit.
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
     try:
+        for k, v in _BOUNDED_CONFS.items():
+            spark.conf.set(k, v)
         query = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
+            sink(stream_df.writeStream)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", old_retain)
-        # The result is the memory sink; the checkpoint is dead once the
-        # query has terminated.
+        for k, v in saved.items():
+            spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
-    table = spark.table(name)
+    return query
+
+
+def run_to_memory(
+    stream_df: DataFrame, mode: str = "append", with_query: bool = False
+):
+    """:func:`drain` ``stream_df`` into a memory sink; return the sink table
+    (or ``(table, query)`` with ``with_query=True`` — the terminated
+    query still exposes ``lastProgress``, e.g. the final event-time
+    watermark, which is how streaming ops derive post-run horizons
+    without re-scanning the source)."""
+    name = f"stream_sink_{os.getpid()}_{next(_MEM_SEQ)}"
+    query = drain(stream_df, lambda w: w.format("memory").queryName(name).outputMode(mode))
+    table = stream_df.sparkSession.table(name)
     return (table, query) if with_query else table
 
 

@@ -18,13 +18,16 @@ overwrite with file-level merge-on-read.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..cache import scratch_dir
 from ..registry import register
-from .source import _ckpt_dir, read_events_stream
+from .source import drain, read_events_stream
+
+# perfbench/batch_ops.py reads and replaces ``upsert._ckpt_dir``, so the
+# name stays until that benchmark code stops wrapping it; ``drain`` makes
+# and removes the checkpoint itself.
+from .source import _ckpt_dir  # noqa: F401
 
 
 def merge_latest(target: DataFrame | None, batch_df: DataFrame) -> DataFrame:
@@ -70,7 +73,6 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = read_events_stream(spark, sf_dir, files_per_trigger=4).select(
         "user_id", "event_id", "event_type", "value", "ts"
     )
-    target = tempfile.mkdtemp(prefix="upsert_target_")
     state = {"df": None}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -79,20 +81,9 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # real table format would never accumulate).
         state["df"] = merge_latest(state["df"], batch_df).localCheckpoint(eager=True)
 
-    ckpt = _ckpt_dir()
-    try:
-        q = (
-            src.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # The result is the target parquet, not the checkpoint.
-        shutil.rmtree(ckpt, ignore_errors=True)
-    out = state["df"]
-    out.write.mode("overwrite").parquet(target)  # prove the sink path too
+    drain(src, lambda w: w.foreachBatch(merge))
+    target = scratch_dir("upsert_target_")
+    state["df"].write.mode("overwrite").parquet(target)  # prove the sink path too
     return spark.read.parquet(target).withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
     ).select("user_id", "event_id", "event_type", "value", "ts")
@@ -159,24 +150,12 @@ def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = read_events_stream(spark, sf_dir, files_per_trigger=4).filter(
         F.col("event_type").isin("signup", "purchase")
     )
-    target = tempfile.mkdtemp(prefix="scd2_target_")
     state = {"df": None}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         state["df"] = merge_scd2(state["df"], batch_df).localCheckpoint(eager=True)
 
-    ckpt = _ckpt_dir()
-    try:
-        q = (
-            src.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # The result is the target parquet, not the checkpoint.
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(src, lambda w: w.foreachBatch(merge))
     out = state["df"]
     if out is None:  # empty source: no batches delivered any rows
         out = spark.createDataFrame(
@@ -184,6 +163,7 @@ def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id bigint, event_id bigint, value double, "
             "valid_from timestamp, valid_to timestamp, is_current boolean",
         )
+    target = scratch_dir("scd2_target_")
     out.write.mode("overwrite").parquet(target)
     return (
         spark.read.parquet(target)

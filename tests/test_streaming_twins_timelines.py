@@ -534,6 +534,7 @@ def test_staging_leaves_only_the_stage_directories(spark, monkeypatch, tmp_path,
 
     import duckdb
 
+    from node_cdc_nats_spark import cache
     from node_cdc_nats_spark.streaming import source
     from tests.conftest import SF_DIR
 
@@ -556,7 +557,7 @@ def test_staging_leaves_only_the_stage_directories(spark, monkeypatch, tmp_path,
         return path
 
     monkeypatch.setattr(tempfile, "mkdtemp", recording)
-    monkeypatch.setattr(source, "_STAGED", {})
+    monkeypatch.setattr(cache, "_STAGED", {})
     stages = [source.stage_events(spark, sf_dir), source.stage_documents(spark, sf_dir)]
     assert [p for p in made if os.path.exists(p)] == stages
     for stage in stages:
