@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..functions.zipcache import gate_zip_rereads
 from ..operators.cdc import (
     _CHANNEL_SQL, SUBSCRIPTIONS, _subs_sql_values, dispatch_subs, with_channel,
 )
@@ -44,6 +45,7 @@ def _make_counter_fn():
     """Nested so cloudpickle ships it by value (no repo on executor path)."""
 
     def counter(key, pdfs, state):
+        gate_zip_rereads()
         import pandas as pd
 
         delivered = state.get[0] if state.exists else 0

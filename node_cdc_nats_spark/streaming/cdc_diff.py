@@ -1,5 +1,5 @@
 """Streaming column-level CDC diff — the continuous twin of the batch
-``cdc_column_diff`` (operators/cdc.py), r7 verdict item 6.
+``cdc_column_diff`` (operators/cdc.py).
 
 The reference delivers CDC envelopes continuously (``lib/nats.js:86-113``
 pushes every message to its subscribers the moment it arrives); a
@@ -12,27 +12,28 @@ its immediate predecessor.
 
 Event-time correctness: a version's diff is final only once no earlier
 version can still arrive, i.e. when the watermark passes its timestamp —
-so rows emit at watermark-crossing time via ``applyInPandasWithState``
-with EventTimeTimeout timers, exactly the harness ``stream_rpc_state``
-proved out. Rows the final watermark never reaches stay pending and emit
-nothing; the oracle applies the same cutoff.
+so rows emit at watermark-crossing time, run by the sharded state core
+(``streaming/sharded.py``) with event-time timers. Rows the final
+watermark never reaches stay pending and emit nothing; the oracle applies
+the same cutoff.
 
-State per shard (sharded keying as in streaming/rpc.py — per-(group,
-batch) fixed costs argue for a few fat groups over thousands of tiny
-ones): pending not-yet-decided versions, plus ONE carry row per user —
-the last decided version, the predecessor of whatever arrives next. The
-pending side is watermark-horizon-bounded like every op here; the carry
-is one row per live key, the same per-key floor any streaming upsert /
-changelog reader holds (Debezium keeps exactly this to render `before`
-images). At 100 TB that is key-cardinality state in RocksDB, not history.
+State per shard: pending not-yet-decided versions, plus ONE carry row per
+user — the last decided version, the predecessor of whatever arrives
+next. The pending side is watermark-horizon-bounded like every op here;
+the carry is one row per live key, the same per-key floor any streaming
+upsert / changelog reader holds (Debezium keeps exactly this to render
+`before` images). At 100 TB that is key-cardinality state in RocksDB, not history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+import sys
+
+import numpy as np
+import pandas as pd
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -42,21 +43,12 @@ from pyspark.sql.types import (
 )
 
 from ..registry import register
-from .source import read_events_stream, run_to_memory
+from .sharded import DELAY_SQL, apply_sharded
+from .source import read_events_stream, run_to_memory, sql_final_watermark
 
-DELAY = "30 minutes"
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 N_SHARDS = 8
-
-# pending versions + one carry row per user (the decided predecessor),
-# packed as ONE pickled tuple of numpy arrays. The r9 layout spelled the
-# same payload as 12 array<...> state columns, which forced a
-# numpy→Python-list conversion of every element on save and a list→Series
-# rebuild on load; with ~100k pending rows round-tripping through the
-# store in the single-data-trigger plan, that conversion was most of the
-# op's cost above the stateless floor (r10 probe: binary save+load of the
-# full 100k costs ~0.23 s vs ~0.9 s for the list layout). pickle protocol
-# 5 serializes numpy buffers by memcpy.
-_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 _OUT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -67,173 +59,126 @@ _OUT_SCHEMA = StructType(
         StructField("value_delta", DoubleType()),
     ]
 )
+_COLS = ("uid", "eid", "ts", "typ", "val", "prp")
+_DTYPES = ("int64", "int64", "int64", object, "float64", object)
+# Fixed column order means only 8 possible changed_cols strings: the 3-bit
+# (event_type, value, props) flag code indexes this table.
+_CHANGED_COLS = np.array(
+    [
+        "", "props", "value", "value,props",
+        "event_type", "event_type,props",
+        "event_type,value", "event_type,value,props",
+    ],
+    dtype=object,
+)
 
 
-def _make_diff_state_fn():
-    """Nested so cloudpickle ships it by value (executors don't have the
-    repo on sys.path — the driver contract)."""
+def _frame(arrs=None) -> pd.DataFrame:
+    if arrs is None:
+        arrs = [np.array([], dtype=d) for d in _DTYPES]
+    return pd.DataFrame(dict(zip(_COLS, arrs)))
 
-    def _diff_state_fn(key, pdfs, state: GroupState):
-        import pickle
 
-        import numpy as np
-        import pandas as pd
+def _diff_step(state, batch, wm_us):
+    """One shard's step (``streaming/sharded.py``). State: the pending
+    versions and each user's carry row, the last decided version (the
+    predecessor of whatever arrives next), as two tuples of column
+    arrays."""
+    pend, carry = (_frame(), _frame()) if state is None else map(_frame, state)
+    if batch is not None:
+        pend = pd.concat(
+            [
+                pend,
+                pd.DataFrame(
+                    {
+                        "uid": batch["user_id"].astype("int64"),
+                        "eid": batch["event_id"].astype("int64"),
+                        "ts": batch["ts"].astype("int64") // 1000,  # ns->us
+                        "typ": batch["event_type"],
+                        "val": batch["value"].astype("float64"),
+                        "prp": batch["props"],
+                    }
+                ),
+            ],
+            ignore_index=True,
+        )
 
-        cols = ("uid", "eid", "ts", "typ", "val", "prp")
+    decide = pend["ts"].to_numpy() <= wm_us
 
-        def empty():
-            return pd.DataFrame(
-                {
-                    "uid": np.array([], dtype="int64"),
-                    "eid": np.array([], dtype="int64"),
-                    "ts": np.array([], dtype="int64"),
-                    "typ": np.array([], dtype=object),
-                    "val": np.array([], dtype="float64"),
-                    "prp": np.array([], dtype=object),
-                }
-            )
+    out = None
+    if decide.any():
+        dec = pend[decide].sort_values(["uid", "ts", "eid"], kind="mergesort")
+        # Prepend each user's carry row so the first decided version
+        # diffs against its true predecessor; carry sorts first
+        # because anything older than it would have been late data
+        # (dropped at the watermark).
+        full = pd.concat(
+            [carry.assign(_carry=True), dec.assign(_carry=False)],
+            ignore_index=True,
+        ).sort_values(["uid", "ts", "eid", "_carry"], kind="mergesort")
+        # _carry=False sorts before True only on exact (ts, eid) ties,
+        # which cannot happen (event_id is unique); order is total.
+        g = full.groupby("uid", sort=False)
+        prev_eid = g["eid"].shift(1)
+        prev_typ = g["typ"].shift(1)
+        prev_val = g["val"].shift(1)
+        prev_prp = g["prp"].shift(1)
 
-        if state.exists:
-            (blob,) = state.get
-            p_arrs, c_arrs = pickle.loads(bytes(blob))
-            pend = pd.DataFrame(dict(zip(cols, p_arrs)))
-            carry = pd.DataFrame(dict(zip(cols, c_arrs)))
-        else:
-            pend = empty()
-            carry = empty()
+        def neq(a, b):  # null-safe IS DISTINCT FROM
+            return (a != b) & ~(a.isna() & b.isna())
 
-        new = [pdf for pdf in pdfs if len(pdf)]
-        if new:
-            pdf = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            pend = pd.concat(
-                [
-                    pend,
-                    pd.DataFrame(
-                        {
-                            "uid": pdf["user_id"].astype("int64"),
-                            "eid": pdf["event_id"].astype("int64"),
-                            "ts": pdf["ts"].astype("int64") // 1000,  # ns->us
-                            "typ": pdf["event_type"],
-                            "val": pdf["value"].astype("float64"),
-                            "prp": pdf["props"],
-                        }
-                    ),
-                ],
-                ignore_index=True,
-            )
+        ct = neq(full["typ"], prev_typ)
+        cv = neq(full["val"], prev_val)
+        cp = neq(full["prp"], prev_prp)
+        is_ins = prev_eid.isna()
+        code = (
+            ct.to_numpy(dtype="int64") * 4
+            + cv.to_numpy(dtype="int64") * 2
+            + cp.to_numpy(dtype="int64")
+        )
+        rows = pd.DataFrame(
+            {
+                "event_id": full["eid"],
+                "user_id": full["uid"],
+                "op": np.where(is_ins, "I", "U"),
+                "changed_cols": np.where(is_ins, None, _CHANGED_COLS[code]),
+                "n_changed": np.where(
+                    is_ins,
+                    0,
+                    ct.astype(int) + cv.astype(int) + cp.astype(int),
+                ),
+                "value_delta": np.where(is_ins, np.nan, full["val"] - prev_val),
+                "_carry": full["_carry"],
+            }
+        )
+        out = (
+            rows[~rows["_carry"]]
+            .drop(columns="_carry")
+            .astype({"event_id": "int64", "user_id": "int64", "n_changed": "int32"})
+        )
+        # New carry: the LAST decided version per user replaces (or
+        # creates) that user's carry; untouched users keep theirs.
+        last = dec.groupby("uid", sort=False).tail(1)
+        carry = (
+            pd.concat([carry, last], ignore_index=True)
+            .sort_values(["uid", "ts", "eid"], kind="mergesort")
+            .groupby("uid", sort=False)
+            .tail(1)
+        )
+        pend = pend[~decide]
 
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        decide = pend["ts"].to_numpy() <= wm_us
-
-        out = None
-        if decide.any():
-            dec = pend[decide].sort_values(
-                ["uid", "ts", "eid"], kind="mergesort"
-            )
-            # Prepend each user's carry row so the first decided version
-            # diffs against its true predecessor; carry sorts first
-            # because anything older than it would have been late data
-            # (dropped at the watermark).
-            full = pd.concat(
-                [carry.assign(_carry=True), dec.assign(_carry=False)],
-                ignore_index=True,
-            ).sort_values(["uid", "ts", "eid", "_carry"], kind="mergesort")
-            # _carry=False sorts before True only on exact (ts, eid) ties,
-            # which cannot happen (event_id is unique); order is total.
-            g = full.groupby("uid", sort=False)
-            prev_eid = g["eid"].shift(1)
-            prev_typ = g["typ"].shift(1)
-            prev_val = g["val"].shift(1)
-            prev_prp = g["prp"].shift(1)
-
-            def neq(a, b):  # null-safe IS DISTINCT FROM
-                return (a != b) & ~(a.isna() & b.isna())
-
-            ct = neq(full["typ"], prev_typ)
-            cv = neq(full["val"], prev_val)
-            cp = neq(full["prp"], prev_prp)
-            is_ins = prev_eid.isna()
-            # Fixed column order means only 8 possible changed_cols
-            # strings: index the lookup table with the 3-bit flag code
-            # instead of a per-row Python join (the r9 comprehension was
-            # the one row-at-a-time loop left in this hot path).
-            lut = np.array(
-                [
-                    "", "props", "value", "value,props",
-                    "event_type", "event_type,props",
-                    "event_type,value", "event_type,value,props",
-                ],
-                dtype=object,
-            )
-            code = (
-                ct.to_numpy(dtype="int64") * 4
-                + cv.to_numpy(dtype="int64") * 2
-                + cp.to_numpy(dtype="int64")
-            )
-            changed_cols = np.where(is_ins, None, lut[code])
-            rows = pd.DataFrame(
-                {
-                    "event_id": full["eid"],
-                    "user_id": full["uid"],
-                    "op": np.where(is_ins, "I", "U"),
-                    "changed_cols": changed_cols,
-                    "n_changed": np.where(
-                        is_ins,
-                        0,
-                        ct.astype(int) + cv.astype(int) + cp.astype(int),
-                    ),
-                    "value_delta": np.where(
-                        is_ins, np.nan, full["val"] - prev_val
-                    ),
-                    "_carry": full["_carry"],
-                }
-            )
-            out = (
-                rows[~rows["_carry"]]
-                .drop(columns="_carry")
-                .astype({"event_id": "int64", "user_id": "int64", "n_changed": "int32"})
-            )
-            # New carry: the LAST decided version per user replaces (or
-            # creates) that user's carry; untouched users keep theirs.
-            last = dec.groupby("uid", sort=False).tail(1)
-            carry = (
-                pd.concat([carry, last], ignore_index=True)
-                .sort_values(["uid", "ts", "eid"], kind="mergesort")
-                .groupby("uid", sort=False)
-                .tail(1)
-            )
-            pend = pend[~decide]
-
-        if len(pend) or len(carry):
-            state.update(
-                (
-                    pickle.dumps(
-                        tuple(
-                            tuple(df_[c].to_numpy() for c in cols)
-                            for df_ in (pend, carry)
-                        ),
-                        protocol=5,
-                    ),
-                )
-            )
-            if len(pend):
-                # Wake this shard when the watermark reaches the oldest
-                # pending version (must exceed the current watermark).
-                state.setTimeoutTimestamp(
-                    max(int(pend["ts"].min()) // 1000, wm_us // 1000) + 1
-                )
-        else:
-            state.remove()
-
-        if out is not None and len(out):
-            yield out
-
-    return _diff_state_fn
+    if not (len(pend) or len(carry)):
+        return out, None, None
+    new_state = tuple(tuple(df_[c].to_numpy() for c in _COLS) for df_ in (pend, carry))
+    # Wake this shard when the watermark reaches the oldest pending
+    # version (must exceed the current watermark).
+    wake_ms = max(int(pend["ts"].min()) // 1000, wm_us // 1000) + 1 if len(pend) else None
+    return out, new_state, wake_ms
 
 
 @register(
     "stream_cdc_column_diff",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
              event_type, value, props,
@@ -242,15 +187,7 @@ def _make_diff_state_fn():
              LAG(value) OVER w AS p_value,
              LAG(props) OVER w AS p_props
       FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    wmx AS (
-      -- ms-truncate the max BEFORE subtracting the delay: Spark's
-      -- watermark tracks event times at millisecond granularity
-      -- (EventTimeStats stores ms), so an event in the sub-ms gap
-      -- must stay pending on BOTH sides (ADVICE r8).
-      SELECT make_timestamp(epoch_ms(MAX(CAST(ts AS TIMESTAMP))) * 1000)
-             - INTERVAL 30 MINUTE AS w
-      FROM events)
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
     SELECT event_id, user_id,
            CASE WHEN p_id IS NULL THEN 'I' ELSE 'U' END AS op,
            CASE WHEN p_id IS NULL THEN NULL ELSE CONCAT_WS(',',
@@ -268,7 +205,7 @@ def _make_diff_state_fn():
            CASE WHEN p_id IS NULL THEN NULL
                 ELSE value - p_value END AS value_delta
     FROM v
-    WHERE ts <= (SELECT w FROM wmx)
+    WHERE ts <= {sql_final_watermark(DELAY_SQL)}
     """,
 )
 def stream_cdc_column_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,7 +216,7 @@ def stream_cdc_column_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state store; the oracle is the batch oracle restricted to the
     versions the final watermark reached.
 
-    Plan: one shard shuffle into ``applyInPandasWithState``; everything
+    Plan: one shard shuffle into the sharded state core; everything
     per batch is a vectorized pandas pass over that shard's slice. State =
     watermark-horizon pending + one row per live key (see module
     docstring)."""
@@ -287,37 +224,12 @@ def stream_cdc_column_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trigger decides everything the final watermark reached): decisions
     # key on ts-vs-watermark only and the staging is time-ordered, so the
     # emitted set is phasing-independent — pinned 1-vs-4 by
-    # tests/test_trigger_phasing.py. r10: the ~100k pending rows that
-    # round-trip the state store between the two triggers now ride ONE
-    # pickled-numpy blob instead of 12 list-typed state columns, and the
-    # changed_cols join is an 8-entry LUT index instead of a per-row
-    # Python loop — 2.83 → ~2.2-2.3 s at sf0.1, leaving the op ~0.4 s
-    # above the measured 1.83 s stateless-passthrough floor.
-    # r12 floor re-measure (VERDICT r11 item 5, quiet box): warm full-
-    # bench value 2.73 s (loadavg_before 0.01) and ISOLATED-session
-    # min-of-5 3.33 s (runs 4.89→3.33, still descending — isolated
-    # sessions never finish warming the codegen/state-store caches the
-    # bench's walk shares). Verdict: the post-blob floor sits ABOVE
-    # 2.5 s under either methodology; the old 2.44 bar was a one-off
-    # quiet read of the pre-r10 code and is retired — the standing bar
-    # is the warm-bench band ~2.7-3.0 s, regression rule unchanged
-    # (max(1.5x, +0.3 s) vs round of record). The Spark 4
-    # state-v2 comparison (transformWithStateInPandas) is environmentally
-    # blocked: its driver worker imports google.protobuf, which is not in
-    # this container (TESTDATA.md).
+    # tests/test_trigger_phasing.py. The ~100k pending rows then
+    # round-trip the state store once, which the blob codec makes cheap.
+    # The Spark 4 state-v2 API (transformWithStateInPandas) is not an
+    # option: its driver worker imports google.protobuf, which is not a
+    # dependency of this project (TESTDATA.md).
     src = read_events_stream(spark, sf_dir, files_per_trigger=4)
-    flow = src.select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    ).withColumn("shard", F.pmod(F.hash("user_id"), F.lit(N_SHARDS)))
-    diffs = (
-        flow.withWatermark("ts", DELAY)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _make_diff_state_fn(),
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    flow = src.select("event_id", "ts", "user_id", "event_type", "value", "props")
+    diffs = apply_sharded(flow, _diff_step, _OUT_SCHEMA, N_SHARDS)
     return run_to_memory(diffs, "append")

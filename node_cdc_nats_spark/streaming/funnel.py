@@ -14,8 +14,8 @@ purchases (s3 only flips false→true). So state per user is tiny — ``S``,
 ``C``, the s3 bit, and the clicks/purchases that are not yet qualified but
 still could be — and the LAST emission per user equals the batch answer
 over all data (the oracle is the batch operator's oracle, spliced
-verbatim). Equivalence caveat (ADVICE r10, the same caveat the other
-streaming twins carry): Spark's stateful operator drops input rows older
+verbatim). Equivalence caveat (the same caveat the other streaming twins
+carry): Spark's stateful operator drops input rows older
 than the current watermark, so the batch-oracle identity holds while
 replay disorder stays within the 30-minute ``DELAY`` — which the staged
 fixture guarantees; an event arriving MORE than DELAY out of event-time
@@ -38,28 +38,21 @@ stage semantics.
 
 from __future__ import annotations
 
+import sys
+
+import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..operators.analytics import FUNNEL_ORACLE
 from ..registry import register
+from .sharded import apply_sharded
 from .source import read_events_stream, run_to_memory
 
-DELAY = "30 minutes"
-# Sharded state keying, same rationale as streaming/rpc.py: fixed
-# per-(group, batch) Arrow/state costs make a few fat shards beat
-# thousands of per-user states; per-user semantics are unchanged because
-# a user's rows always land in the same shard.
-N_SHARDS = 4
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
-_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
+N_SHARDS = 4
 _OUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -70,93 +63,69 @@ _OUT_SCHEMA = StructType(
 )
 
 
-def _make_funnel_state_fn():
-    """Per-shard state fn, nested so cloudpickle ships it by value
-    (executors don't have the repo on sys.path — driver contract)."""
+def _funnel_step(state, batch, wm_us):
+    """One shard's step (``streaming/sharded.py``). State: uid ->
+    [S, C, s3, pend_clicks, pend_purchases], where keys are
+    (ts_us, event_id) tuples compared lexicographically — the batch
+    operator's (ts, event_id) window order. It never sets a timer."""
+    users = dict(state or {})  # a user's entry is replaced, never mutated
+    if batch is None:
+        return None, users, None
+    ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()  # ns -> us
+    uids = batch["user_id"].to_numpy()
+    eids = batch["event_id"].to_numpy()
+    etypes = batch["event_type"].to_numpy()
 
-    def _funnel_state_fn(key, pdfs, state: GroupState):
-        import pickle
+    touched: dict[int, list[list]] = {}
+    for i in range(len(batch)):
+        touched.setdefault(int(uids[i]), []).append(
+            [(int(ts_us[i]), int(eids[i])), etypes[i]]
+        )
 
-        import pandas as pd
-
-        if state.exists:
-            (blob,) = state.get
-            users = pickle.loads(bytes(blob))
-        else:
-            # uid -> [S, C, s3, pend_clicks, pend_purchases]; keys are
-            # (ts_us, event_id) tuples, compared lexicographically — the
-            # batch operator's (ts, event_id) window order.
-            users = {}
-
-        new = [pdf for pdf in pdfs if len(pdf)]
-        if not new:
-            state.update((pickle.dumps(users, protocol=5),))
-            return
-        pdf = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-        ts_us = (pdf["ts"].astype("int64") // 1000).to_numpy()  # ns -> us
-        uids = pdf["user_id"].to_numpy()
-        eids = pdf["event_id"].to_numpy()
-        etypes = pdf["event_type"].to_numpy()
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        touched: dict[int, list[list]] = {}
-        for i in range(len(pdf)):
-            touched.setdefault(int(uids[i]), []).append(
-                [(int(ts_us[i]), int(eids[i])), etypes[i]]
-            )
-
-        out_rows = []
-        for uid, evs in touched.items():
-            st = users.get(uid)
-            if st is None:
-                st = [None, None, False, [], []]
-            S, C, s3, pend_c, pend_p = st
-            new_sign = [k for k, t in evs if t == "signup"]
-            new_click = [k for k, t in evs if t == "click"]
-            new_purch = [k for k, t in evs if t == "purchase"]
-            if new_sign:
-                s_min = min(new_sign)
-                if S is None or s_min < S:
-                    S = s_min
-            if not s3:
-                # qualify clicks against the (possibly lowered) S
-                cand_c = pend_c + new_click
-                if S is not None:
-                    qual = [k for k in cand_c if k >= S]
-                    if qual:
-                        q_min = min(qual)
-                        if C is None or q_min < C:
-                            C = q_min
-                    pend_c = [k for k in cand_c if k < S]
-                else:
-                    pend_c = cand_c
-                # qualify purchases against the (possibly lowered) C
-                cand_p = pend_p + new_purch
-                if C is not None:
-                    if any(k >= C for k in cand_p):
-                        s3 = True
-                    else:
-                        pend_p = cand_p
+    out_rows = []
+    for uid, evs in touched.items():
+        S, C, s3, pend_c, pend_p = users.get(uid) or [None, None, False, [], []]
+        new_sign = [k for k, t in evs if t == "signup"]
+        new_click = [k for k, t in evs if t == "click"]
+        new_purch = [k for k, t in evs if t == "purchase"]
+        if new_sign:
+            s_min = min(new_sign)
+            if S is None or s_min < S:
+                S = s_min
+        if not s3:
+            # qualify clicks against the (possibly lowered) S
+            cand_c = pend_c + new_click
+            if S is not None:
+                qual = [k for k in cand_c if k >= S]
+                if qual:
+                    q_min = min(qual)
+                    if C is None or q_min < C:
+                        C = q_min
+                pend_c = [k for k in cand_c if k < S]
+            else:
+                pend_c = cand_c
+            # qualify purchases against the (possibly lowered) C
+            cand_p = pend_p + new_purch
+            if C is not None:
+                if any(k >= C for k in cand_p):
+                    s3 = True
                 else:
                     pend_p = cand_p
-            if s3:
-                # flags are final-able: S and C exist, nothing else matters
-                pend_c, pend_p = [], []
             else:
-                # watermark prune: a pending click (purchase) below the
-                # watermark can never be qualified by a future S (C),
-                # because future arrivals sit at-or-above the watermark
-                pend_c = [k for k in pend_c if k[0] >= wm_us]
-                pend_p = [k for k in pend_p if k[0] >= wm_us]
-            users[uid] = [S, C, s3, pend_c, pend_p]
-            out_rows.append(
-                (uid, int(S is not None), int(C is not None), int(s3))
-            )
+                pend_p = cand_p
+        if s3:
+            # flags are final-able: S and C exist, nothing else matters
+            pend_c, pend_p = [], []
+        else:
+            # watermark prune: a pending click (purchase) below the
+            # watermark can never be qualified by a future S (C),
+            # because future arrivals sit at-or-above the watermark
+            pend_c = [k for k in pend_c if k[0] >= wm_us]
+            pend_p = [k for k in pend_p if k[0] >= wm_us]
+        users[uid] = [S, C, s3, pend_c, pend_p]
+        out_rows.append((uid, int(S is not None), int(C is not None), int(s3)))
 
-        state.update((pickle.dumps(users, protocol=5),))
-        yield pd.DataFrame(out_rows, columns=["user_id", "s1", "s2", "s3"])
-
-    return _funnel_state_fn
+    return pd.DataFrame(out_rows, columns=["user_id", "s1", "s2", "s3"]), users, None
 
 
 @register("stream_funnel", oracle=FUNNEL_ORACLE)
@@ -168,21 +137,11 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the census is the same 1-row report and the oracle is the batch
     operator's oracle verbatim — no watermark cutoff in the semantics."""
     src = read_events_stream(spark, sf_dir, files_per_trigger=4)
-    flow = (
-        src.filter(F.col("event_type").isin("signup", "click", "purchase"))
-        .select("event_id", "ts", "user_id", "event_type")
-        .withColumn("shard", F.pmod(F.hash("user_id"), F.lit(N_SHARDS)))
+    flow = src.filter(F.col("event_type").isin("signup", "click", "purchase")).select(
+        "event_id", "ts", "user_id", "event_type"
     )
-    flags = (
-        flow.withWatermark("ts", DELAY)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _make_funnel_state_fn(),
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    flags = apply_sharded(
+        flow, _funnel_step, _OUT_SCHEMA, N_SHARDS, "update", event_timers=False
     )
     sink = run_to_memory(flags, "update")
     per_user = sink.groupBy("user_id").agg(

@@ -30,26 +30,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
-from .source import read_events_stream, run_to_memory
+from .source import read_events_stream, run_to_memory, sql_final_watermark
 
 DELAY = "30 minutes"
 
 
 @register(
     "stream_downsample_ohlc",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT event_type,
              DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS bucket,
              CAST(ts AS TIMESTAMP) AS ts, event_id, value
-      FROM events),
-    wmx AS (
-      -- ms-truncate the max BEFORE subtracting the delay: Spark's
-      -- watermark tracks event times at millisecond granularity
-      -- (EventTimeStats stores ms), so an event in the sub-ms gap
-      -- must stay pending on BOTH sides (ADVICE r8).
-      SELECT make_timestamp(epoch_ms(MAX(CAST(ts AS TIMESTAMP))) * 1000)
-             - INTERVAL 30 MINUTE AS w
       FROM events)
     SELECT event_type, bucket,
            FIRST(value ORDER BY ts, event_id) AS open,
@@ -60,7 +52,7 @@ DELAY = "30 minutes"
            CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS vsum
     FROM b
     GROUP BY event_type, bucket
-    HAVING bucket + INTERVAL 1 HOUR <= (SELECT w FROM wmx)
+    HAVING bucket + INTERVAL 1 HOUR <= {sql_final_watermark("INTERVAL 30 MINUTE")}
     """,
 )
 def stream_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,19 +13,10 @@ Reference semantics being reproduced:
 Event-time correctness requires deciding a request only once the watermark
 passes its deadline (any response that could still beat the current winner
 has then provably arrived), so BOTH outcomes emit at watermark-crossing
-time via `applyInPandasWithState` with EventTimeTimeout timers. Requests
-whose deadline the final watermark never reaches stay pending and emit
-nothing — the oracle applies the same cutoff.
-
-Sharded keying: the state is grouped by ``hash(user_id) % N_SHARDS``, not
-by raw user_id, with per-user correlation done inside the shard. The state
-API pays fixed per-(group, batch) costs — Arrow slice, state
-deserialize/serialize, timer bookkeeping — so thousands of tiny per-user
-states are slower AND no more parallel than `N_SHARDS >> partitions`
-consolidated ones (measured ~2× end-to-end here). Same technique a
-production job uses when key cardinality outruns useful parallelism; the
-per-user semantics are unchanged because a user's rows always land in the
-same shard.
+time, run by the sharded state core (`streaming/sharded.py`) with
+event-time timers. Requests whose deadline the final watermark never
+reaches stay pending and emit nothing — the oracle applies the same
+cutoff.
 
 State per shard: pending (user, req_id, req_ts) triples + responses not
 yet safely discardable. Responses with ts < watermark - timeout can serve
@@ -37,36 +28,24 @@ story: traffic-per-horizon, independent of history.
 
 from __future__ import annotations
 
+import sys
+from functools import partial
+
+import numpy as np
+import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..registry import register
-from .source import read_events_stream, run_to_memory
+from .sharded import DELAY_SQL, apply_sharded
+from .source import read_events_stream, run_to_memory, sql_final_watermark
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 TIMEOUT_MIN = 10
-DELAY = "30 minutes"
-# Sharded state keying (see module docstring). 4 shards = 2 Arrow groups
-# per state partition at the bounded-run partition count (2) — each
-# (group, batch) pays fixed Arrow-slice + state (de)serialize costs, so
-# fewer, fatter groups win until groups-per-partition drops below 2
-# (measured: 4 shards ~20% faster than 8, 2 shards worse). On a real
-# cluster size this to ~2× the state-store partition count.
+TIMEOUT_US = TIMEOUT_MIN * 60 * 1_000_000
 N_SHARDS = 4
-
-# Six int64 vectors (pending requests + candidate responses) packed as
-# ONE pickled tuple of numpy arrays: protocol-5 pickling is a buffer
-# memcpy, where the r9 list-typed state columns paid a numpy->Python-list
-# conversion per element on every save and a list->array rebuild on every
-# load (the same lesson as streaming/cdc_diff.py, measured there at
-# ~0.23 s vs ~0.9 s for a 100k-row round trip).
-_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 _OUT_SCHEMA = StructType(
     [
         StructField("req_id", LongType()),
@@ -74,125 +53,83 @@ _OUT_SCHEMA = StructType(
         StructField("code", IntegerType()),
     ]
 )
+_OUT_DTYPES = {"req_id": "int64", "resp_id": "float64", "code": "int32"}
 
 
-def _make_rpc_state_fn(res_process=None):
-    """Build the per-shard state function. Returned as a NESTED function so
-    cloudpickle serializes it by value — executor workers don't have the
-    repo on sys.path (driver contract), and a module-level function would
-    pickle by reference and ModuleNotFoundError on the workers.
+def _rpc_step(state, batch, wm_us, res_process=None):
+    """One shard's step (``streaming/sharded.py``). State: six int64
+    vectors, the pending requests' (user, id, ts) and the candidate
+    responses' (user, id, ts).
 
     ``res_process`` is the reference's winner-transform hook
     (``options.resProcess``, lib/nats.js:218-222): a pandas
     DataFrame→DataFrame callable applied to each batch of DECIDED winners
     (code 200) at resolution time, before emission — 408 decisions never
-    see it, exactly like the reference. It is captured by value in the
-    closure, so arbitrary user callables ship to the executors."""
+    see it, exactly like the reference."""
+    req_users, req_ids, req_ts, resp_users, resp_ids, resp_ts = (
+        state or [np.empty(0, dtype=np.int64)] * 6
+    )
+    if batch is not None:
+        ts_us = (batch["ts"].astype("int64") // 1000).to_numpy()  # ns -> us
+        is_req = batch["is_req"].to_numpy()
+        uid = batch["user_id"].to_numpy()
+        eid = batch["event_id"].to_numpy()
+        req_users = np.concatenate([req_users, uid[is_req]])
+        req_ids = np.concatenate([req_ids, eid[is_req]])
+        req_ts = np.concatenate([req_ts, ts_us[is_req]])
+        resp_users = np.concatenate([resp_users, uid[~is_req]])
+        resp_ids = np.concatenate([resp_ids, eid[~is_req]])
+        resp_ts = np.concatenate([resp_ts, ts_us[~is_req]])
 
-    def _rpc_state_fn(key, pdfs, state: GroupState):
-        import pickle
+    decide = req_ts + TIMEOUT_US <= wm_us  # every response <= deadline has arrived
 
-        import numpy as np
-        import pandas as pd
-
-        TIMEOUT_US = 10 * 60 * 1_000_000
-        if state.exists:
-            (blob,) = state.get
-            st = list(pickle.loads(bytes(blob)))
-        else:
-            st = [np.empty(0, dtype=np.int64)] * 6
-        req_users, req_ids, req_ts, resp_users, resp_ids, resp_ts = st
-
-        new = [pdf for pdf in pdfs if len(pdf)]
-        if new:
-            pdf = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            ts_us = (pdf["ts"].astype("int64") // 1000).to_numpy()  # ns -> us
-            is_req = pdf["is_req"].to_numpy()
-            uid = pdf["user_id"].to_numpy()
-            eid = pdf["event_id"].to_numpy()
-            req_users = np.concatenate([req_users, uid[is_req]])
-            req_ids = np.concatenate([req_ids, eid[is_req]])
-            req_ts = np.concatenate([req_ts, ts_us[is_req]])
-            resp_users = np.concatenate([resp_users, uid[~is_req]])
-            resp_ids = np.concatenate([resp_ids, eid[~is_req]])
-            resp_ts = np.concatenate([resp_ts, ts_us[~is_req]])
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        deadline = req_ts + TIMEOUT_US
-        decide = deadline <= wm_us  # every response <= deadline has arrived
-
-        out = None
-        if decide.any():
-            # First-response-wins as a vectorized per-user forward as-of
-            # match: responses deduped to the min resp_id per (user, ts)
-            # (the (ts, id) tie-break), then merge_asof picks the nearest
-            # response with rts <= pts <= rts + TIMEOUT for each request.
-            q = pd.DataFrame(
-                {
-                    "user": req_users[decide],
-                    "ts": req_ts[decide],
-                    "req_id": req_ids[decide],
-                }
-            ).sort_values("ts", kind="mergesort")
-            r = (
-                pd.DataFrame(
-                    {"user": resp_users, "ts": resp_ts, "resp_id": resp_ids}
-                )
-                .sort_values(["ts", "resp_id"], kind="mergesort")
-                .drop_duplicates(["user", "ts"], keep="first")
-            )
-            m = pd.merge_asof(
-                q, r, on="ts", by="user",
-                direction="forward", tolerance=TIMEOUT_US,
-            )
-            out = pd.DataFrame(
-                {
-                    "req_id": m["req_id"],
-                    "resp_id": m["resp_id"],
-                    "code": np.where(m["resp_id"].notna(), 200, 408),
-                }
-            ).astype({"req_id": "int64", "resp_id": "float64", "code": "int32"})
-
-        # Prune: a response older than one timeout horizon below the
-        # watermark can serve no undecided or future request.
-        keep_r = resp_ts + TIMEOUT_US >= wm_us
-        resp_users, resp_ids, resp_ts = (
-            resp_users[keep_r], resp_ids[keep_r], resp_ts[keep_r],
+    out = None
+    if decide.any():
+        # First-response-wins as a vectorized per-user forward as-of
+        # match: responses deduped to the min resp_id per (user, ts)
+        # (the (ts, id) tie-break), then merge_asof picks the nearest
+        # response with rts <= pts <= rts + TIMEOUT for each request.
+        q = pd.DataFrame(
+            {
+                "user": req_users[decide],
+                "ts": req_ts[decide],
+                "req_id": req_ids[decide],
+            }
+        ).sort_values("ts", kind="mergesort")
+        r = (
+            pd.DataFrame({"user": resp_users, "ts": resp_ts, "resp_id": resp_ids})
+            .sort_values(["ts", "resp_id"], kind="mergesort")
+            .drop_duplicates(["user", "ts"], keep="first")
         )
-        pend = ~decide
-        req_users, req_ids, req_ts = (
-            req_users[pend], req_ids[pend], req_ts[pend],
+        m = pd.merge_asof(
+            q, r, on="ts", by="user",
+            direction="forward", tolerance=TIMEOUT_US,
         )
-
-        if len(req_ids) or len(resp_ids):
-            state.update(
-                (
-                    pickle.dumps(
-                        (
-                            req_users, req_ids, req_ts,
-                            resp_users, resp_ids, resp_ts,
-                        ),
-                        protocol=5,
-                    ),
+        out = pd.DataFrame(
+            {
+                "req_id": m["req_id"],
+                "resp_id": m["resp_id"],
+                "code": np.where(m["resp_id"].notna(), 200, 408),
+            }
+        ).astype(_OUT_DTYPES)
+        if res_process is not None:
+            won = out["code"] == 200
+            if won.any():
+                out = pd.concat([res_process(out[won].copy()), out[~won]]).astype(
+                    _OUT_DTYPES
                 )
-            )
-            if len(req_ts):
-                state.setTimeoutTimestamp(
-                    int(req_ts.min() + TIMEOUT_US) // 1000
-                )
-        else:
-            state.remove()
 
-        if out is not None and len(out):
-            if res_process is not None:
-                won = out["code"] == 200
-                if won.any():
-                    out = pd.concat(
-                        [res_process(out[won].copy()), out[~won]]
-                    ).astype({"req_id": "int64", "resp_id": "float64", "code": "int32"})
-            yield out
+    # Prune: a response older than one timeout horizon below the
+    # watermark can serve no undecided or future request.
+    keep_r = resp_ts + TIMEOUT_US >= wm_us
+    resp_users, resp_ids, resp_ts = resp_users[keep_r], resp_ids[keep_r], resp_ts[keep_r]
+    pend = ~decide
+    req_users, req_ids, req_ts = req_users[pend], req_ids[pend], req_ts[pend]
 
-    return _rpc_state_fn
+    if not (len(req_ids) or len(resp_ids)):
+        return out, None, None
+    wake_ms = int(req_ts.min() + TIMEOUT_US) // 1000 if len(req_ts) else None
+    return out, (req_users, req_ids, req_ts, resp_users, resp_ids, resp_ts), wake_ms
 
 
 @register(
@@ -204,16 +141,6 @@ def _make_rpc_state_fn(res_process=None):
     resp AS (
       SELECT event_id AS resp_id, user_id, CAST(ts AS TIMESTAMP) AS resp_ts
       FROM events WHERE event_type IN ('purchase', 'signup')),
-    wmx AS (  -- the watermark tracks rows REACHING it: the stream filters to
-              -- the three RPC event types BEFORE withWatermark, so the final
-              -- cutoff is the max ts of those types, not of all events
-      -- ms-truncate the max BEFORE subtracting the delay: Spark's
-      -- watermark tracks event times at millisecond granularity
-      -- (EventTimeStats stores ms), so an event in the sub-ms gap
-      -- must stay pending on BOTH sides (ADVICE r8).
-      SELECT make_timestamp(epoch_ms(MAX(CAST(ts AS TIMESTAMP))) * 1000)
-             - INTERVAL 30 MINUTE AS w
-      FROM events WHERE event_type IN ('click', 'purchase', 'signup')),
     matched AS (
       SELECT r.req_id, p.resp_id,
              ROW_NUMBER() OVER (PARTITION BY r.req_id
@@ -226,55 +153,43 @@ def _make_rpc_state_fn(res_process=None):
            CAST(CASE WHEN m.resp_id IS NULL THEN 408 ELSE 200 END AS INT) AS code
     FROM req q LEFT JOIN (SELECT req_id, resp_id FROM matched WHERE rn = 1) m
       USING (req_id)
-    WHERE q.req_ts + INTERVAL {TIMEOUT_MIN} MINUTE <= (SELECT w FROM wmx)
+    -- the stream filters to the three RPC event types BEFORE its
+    -- watermark, so the final cutoff is the max ts of those types
+    WHERE q.req_ts + INTERVAL {TIMEOUT_MIN} MINUTE
+          <= {sql_final_watermark(DELAY_SQL, ("click", "purchase", "signup"))}
     """,
 )
 def stream_rpc_state(spark: SparkSession, sf_dir: str, res_process=None) -> DataFrame:
     """Streaming twin of ``rpc_first_response`` (operators/cdc.py): 'click'
     events are requests, 'purchase'/'signup' the unioned response subjects,
-    user_id the correlation key (sharded — see module docstring), 10-minute
-    timeout under a 30-minute watermark. Decisions (200 with the first
-    response, or 408) emit exactly once, when the watermark crosses each
-    request's deadline; requests the final watermark never reaches are
-    still pending and emit nothing, which the oracle's WHERE mirrors.
+    user_id the correlation key, 10-minute timeout under a 30-minute
+    watermark. Decisions (200 with the first response, or 408) emit
+    exactly once, when the watermark crosses each request's deadline;
+    requests the final watermark never reaches are still pending and emit
+    nothing, which the oracle's WHERE mirrors.
 
-    Cost decomposition (r8 profile, sf0.1, min-of-3 on local[32]): the
-    one-file-per-trigger run (4 data triggers + the no-data flush) took
-    4.16 s, of which the matching logic itself is ~0.6 s — a no-op state
-    fn over the same pipeline costs 3.52 s and a stateless passthrough of
-    the same source 1.02 s. The cost is micro-batch MACHINERY: each
-    trigger pays a fixed ~0.66 s (offset/commit WAL ~70 ms, state-store
-    open+snapshot ~65 ms/partition, queryPlanning ~30 ms, and the
-    applyInPandasWithState Arrow round-trip + state (de)serialize, which
-    dominates). RocksDB (+0.5 s) and bigger Arrow batches (±0) don't
-    move it; trigger COUNT does. So this bounded run ingests 2 staged
-    files per trigger (2 data triggers + flush): the cross-batch story —
-    requests carried in state across triggers, decisions emitted at two
-    separate watermark advances, late-response pruning — is intact, and
-    the fixed overhead halves. A production deployment sizes its trigger
-    interval the same way: by throughput, never one file per batch."""
+    Cost decomposition (sf0.1, min of 3 on local[32], one staged file per
+    trigger: 4 data triggers + the no-data flush): 4.16 s, of which the
+    matching logic itself is ~0.6 s — a no-op state fn over the same
+    pipeline costs 3.52 s and a stateless passthrough of the same source
+    1.02 s. The cost is micro-batch MACHINERY: each trigger pays a fixed
+    ~0.66 s (offset/commit WAL ~70 ms, state-store open+snapshot
+    ~65 ms/partition, queryPlanning ~30 ms, and the
+    state operator's Arrow round-trip + state (de)serialize, which
+    dominates). RocksDB (+0.5 s) and bigger Arrow batches (±0) don't move
+    it; trigger COUNT does. So this bounded run ingests all 4 staged files
+    in one data trigger and the no-data flush decides what the final
+    watermark reached; requests still carry in state from one trigger to
+    the next. A production deployment sizes its trigger interval the same
+    way: by throughput, never one file per batch."""
     src = read_events_stream(spark, sf_dir, files_per_trigger=4)
     # Request/response classification happens JVM-side so only a boolean
     # (not the event_type string) crosses the state shuffle and Arrow.
-    flow = (
-        src.filter(F.col("event_type").isin("click", "purchase", "signup"))
-        .select(
-            "event_id", "ts", "user_id",
-            (F.col("event_type") == "click").alias("is_req"),
-        )
-        .withColumn("shard", F.pmod(F.hash("user_id"), F.lit(N_SHARDS)))
+    flow = src.filter(F.col("event_type").isin("click", "purchase", "signup")).select(
+        "event_id", "ts", "user_id", (F.col("event_type") == "click").alias("is_req")
     )
-    decided = (
-        flow.withWatermark("ts", DELAY)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _make_rpc_state_fn(res_process),
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    step = partial(_rpc_step, res_process=res_process)
+    decided = apply_sharded(flow, step, _OUT_SCHEMA, N_SHARDS)
     return run_to_memory(decided, "append").select(
         "req_id", F.col("resp_id").cast("long").alias("resp_id"), "code"
     )

@@ -287,8 +287,20 @@ def final_watermark(query) -> "datetime.datetime":
 
 
 # Shared oracle fragments ------------------------------------------------------
-# Final watermark after the whole stream drains: global max event time minus
-# the delay. Append-mode emission keeps exactly the windows/sessions whose
-# END <= this value (Spark evicts state when watermark >= end).
-def sql_final_watermark(delay_sql: str) -> str:
-    return f"(SELECT MAX(CAST(ts AS TIMESTAMP)) - {delay_sql} FROM events)"
+def sql_final_watermark(delay_sql: str, event_types: tuple[str, ...] = ()) -> str:
+    """DuckDB scalar subquery for the event-time watermark once the whole
+    stream has drained: the max event time of the rows that reach
+    ``withWatermark`` (only ``event_types`` when the stream filters to
+    them first) minus ``delay_sql``. Append-mode emission keeps exactly
+    the windows, sessions and decisions whose end is <= this value (Spark
+    evicts state once the watermark reaches the end). The max is
+    truncated to milliseconds before the delay is subtracted, because
+    Spark's ``EventTimeStats`` tracks event times in ms: an event in the
+    sub-ms gap stays pending on both sides."""
+    where = ""
+    if event_types:
+        where = " WHERE event_type IN (" + ", ".join(f"'{t}'" for t in event_types) + ")"
+    return (
+        "(SELECT make_timestamp(epoch_ms(MAX(CAST(ts AS TIMESTAMP))) * 1000)"
+        f" - {delay_sql} FROM events{where})"
+    )
